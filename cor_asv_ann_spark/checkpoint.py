@@ -4,14 +4,30 @@ metrics ... so a killed job resumes without recomputing completed
 partitions").
 
 Design: documents hash into B salt buckets (pmod(xxhash64(doc_id), B)).
-The driver loop processes one bucket at a time: run the pipeline
-filtered to the bucket, append the output partition, then append one
-lineage row. On restart, completed buckets are read back and skipped
-(an anti-join at driver level — no recomputation). Each bucket commit
-is atomic-enough locally via a per-bucket parquet subdirectory; on a
-real cluster the same loop commits Iceberg snapshots (writeTo().append()
-per bucket) and the lineage table is an Iceberg table keyed
-(run_id, bucket).
+The input is staged ONCE before the bucket loop: one job writes the
+span table as a parquet snapshot partitioned by bucket, so the upstream
+source (a PAGE-XML parse, a span synthesis) runs once per document, not
+once per bucket. The driver loop then processes one bucket at a time:
+read only that bucket's partition of the snapshot (partition pruning),
+run the flagship line assembly + correction
+(``correction.correct_span_lines``) on it, write the output partition,
+then append one lineage row. On restart, completed buckets are read
+back and skipped (an anti-join at driver level — no recomputation), and
+a snapshot whose ``_SUCCESS`` marker exists is reused. Each bucket
+commit is atomic-enough locally via a per-bucket parquet subdirectory;
+on a real cluster the same loop commits Iceberg snapshots
+(writeTo().append() per bucket) and the lineage table is an Iceberg
+table keyed (run_id, bucket).
+
+The lineage table is tiny (one row per bucket), so the driver reads and
+writes it with pyarrow instead of running Spark jobs: a row is written
+under a hidden temporary name and ``os.replace``d into a
+``part-*.parquet`` file, so a kill between write and rename leaves no
+half-written row behind (hidden names are skipped by pyarrow and Spark
+alike). Spark reads the directory as before, old Spark-written rows
+included. The snapshot lives in the lineage directory under a
+``_``-prefixed name, which both readers skip as well, and is removed
+once the last bucket commits.
 
 At 10^12 docs the bucket count B is chosen so one bucket ≈ a few
 executor-hours; the pipeline inside a bucket still parallelizes across
@@ -20,26 +36,42 @@ all executors (buckets are a *resume* grain, not a parallelism grain).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
+import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as pds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schema import LINEAGE_SCHEMA
 
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+
 
 def completed_buckets(spark: SparkSession, lineage_dir: str, run_id: str) -> set[int]:
-    if not os.path.isdir(lineage_dir) or not os.listdir(lineage_dir):
+    if not os.path.isdir(lineage_dir):
         return set()
-    df = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_dir)
-    return {r.bucket for r in df.filter(F.col("run_id") == run_id).select("bucket").collect()}
+    keys = _LINEAGE_ARROW.field("run_id"), _LINEAGE_ARROW.field("bucket")
+    rows = pds.dataset(lineage_dir, schema=pa.schema(keys), format="parquet").to_table(
+        columns=["bucket"], filter=pds.field("run_id") == run_id
+    )
+    return set(rows.column("bucket").to_pylist())
 
 
 def append_lineage_row(spark: SparkSession, lineage_dir: str, row: dict) -> None:
-    df = spark.createDataFrame([row], schema=LINEAGE_SCHEMA)
-    df.coalesce(1).write.mode("append").parquet(lineage_dir)
+    os.makedirs(lineage_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(lineage_dir, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist([row], schema=_LINEAGE_ARROW), tmp)
+    os.replace(tmp, os.path.join(lineage_dir, name))
 
 
 def run_resumable(
@@ -61,22 +93,33 @@ def run_resumable(
     (CONFMAT_SCHEMA) is the confusion-network channel — bucketed by the
     same doc_id salt and joined onto the line frame exactly as
     correct_pipeline does (shipped across the UDF boundary as JSON)."""
-    from .operators.correction import (
-        assemble_lines,
-        correct_lines,
-        correct_lines_stateful,
-        reassemble,
-        salt_bucket,
-        spans_with_line_no,
-    )
+    from .operators.correction import correct_span_lines, reassemble, salt_bucket
 
     done = completed_buckets(spark, lineage_dir, run_id)
     summary = {"run_id": run_id, "buckets_total": n_buckets, "buckets_skipped": len(done)}
-    for b in range(n_buckets):
-        if b in done:
-            continue
+    todo = [b for b in range(n_buckets) if b not in done]
+    staged_dir = os.path.join(lineage_dir, "_staged", run_id)
+    staged = spans_df.select("doc_id", "spans")
+    # explicit read schema: an empty input stages no file to infer it from
+    staged_schema = T.StructType(
+        staged.schema.fields + [T.StructField("bucket", T.IntegerType())]
+    )
+    if todo and not os.path.exists(os.path.join(staged_dir, "_SUCCESS")):
+        staged.withColumn("bucket", salt_bucket(F.col("doc_id"), n_buckets)).write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(staged_dir)
+    n_len = F.expr("aggregate(texts, 0, (a, t) -> a + length(t))")
+    for b in todo:
         t0 = time.time()
-        bucketed = spans_df.filter(salt_bucket(F.col("doc_id"), n_buckets) == b)
+        bucketed = (
+            spark.read.schema(staged_schema)
+            .parquet(staged_dir)
+            .filter(F.col("bucket") == b)
+            .drop("bucket")
+        )
+        cm_b = None
+        if confmat_df is not None:
+            cm_b = confmat_df.filter(salt_bucket(F.col("doc_id"), n_buckets) == b)
         # correction (the dominant UDF/inference stage) runs EXACTLY ONCE
         # per bucket: the lineage metrics ride on the write job itself via
         # observe() — no second pass and no persisted copy of the
@@ -84,22 +127,12 @@ def run_resumable(
         # bottleneck at 10^12 docs). countDistinct is not allowed in an
         # observation; n_docs comes from the reassembled frame where one
         # row IS one doc.
-        from pyspark.sql import Observation
-
-        n_len = F.expr("aggregate(texts, 0, (a, t) -> a + length(t))")
         obs_lines = Observation()
         obs_docs = Observation()
-        line_frame = assemble_lines(spans_with_line_no(bucketed))
-        if confmat_df is not None:
-            cm_b = confmat_df.filter(
-                salt_bucket(F.col("doc_id"), n_buckets) == b
-            ).withColumn("confmat", F.to_json("confmat"))
-            line_frame = line_frame.join(cm_b, ["doc_id", "line_no"], "left")
-        if stateful_correct_docs is not None:
-            corrected = correct_lines_stateful(line_frame, stateful_correct_docs)
-        else:
-            corrected = correct_lines(line_frame, corrector)
-        lines = corrected.observe(
+        lines = correct_span_lines(
+            bucketed, corrector, confmat_df=cm_b,
+            stateful_correct_docs=stateful_correct_docs,
+        ).observe(
             obs_lines,
             F.count(F.lit(1)).alias("n_lines"),
             F.sum(n_len).alias("n_chars"),
@@ -131,4 +164,7 @@ def run_resumable(
                 "finished_at": datetime.datetime.now(datetime.timezone.utc),
             },
         )
+    shutil.rmtree(staged_dir, ignore_errors=True)
+    with contextlib.suppress(OSError):  # other runs' snapshots remain
+        os.rmdir(os.path.dirname(staged_dir))
     return summary

@@ -3,26 +3,26 @@
 Dataflow (north-star shape, BASELINE.json):
 
     read spans table
-      → annotate each span with its line number *inside the array*
-        (higher-order ``aggregate`` prefix-scan — no window, no shuffle)
-      → posexplode to span grain
-      → groupBy (doc_id, line_no) assembling per-line span arrays
-        (this hash redistribution at *line* grain is what defeats
-        long-document skew: a 10^6-span document becomes 10^5
-        independent line rows instead of one giant task — the reference
-        instead sent a whole page as one model batch,
-        /root/reference/ocrd_cor_asv_ann/wrapper/transcode.py:110-115,
+      → cut each document's span array into lines at its newline spans
+        (``lines_from_span_arrays``: a per-row HOF slice — no explode,
+        no aggregation)
+      → optional salt bucket filter (pmod(xxhash64(doc_id), B)) used by
+        the checkpoint/lineage layer for resumable per-bucket runs
+      → repartition(2×cores, doc_id, line_no): this hash redistribution
+        at *line* grain is what defeats long-document skew (a
+        10^6-span document becomes 10^5 independent line rows instead
+        of one giant task — the reference instead sent a whole page as
+        one model batch, ocrd_cor_asv_ann/wrapper/transcode.py:110-115,
         which is exactly the skew failure mode)
-      → optional salt bucket (pmod(xxhash64(doc_id), B)) used by the
-        checkpoint/lineage layer for resumable per-bucket runs
       → mapInPandas correction UDF (Arrow batches ≈ the reference's
         256-line batches, lib/seq2seq.py:111): charmap rules or numpy
         seq2seq greedy/beam decode, then alignment-path segmentation +
-        whitespace redistribution (corelib)
-      → explode corrected spans, union with bypassed media spans
+        whitespace redistribution (corelib); media spans ride along as
+        locked members of their line
+      → explode corrected spans
       → groupBy(doc_id) ordered collect_list reassembly → spans table
 
-Shuffle budget: exactly two wide exchanges (line assembly, doc
+Shuffle budget: exactly two wide exchanges (line repartition, doc
 reassembly); the correction stage itself is narrow. At 10^12 docs both
 exchanges hash on high-cardinality keys and AQE coalesces the tail.
 """
@@ -420,49 +420,30 @@ def reassemble(corrected: DataFrame, with_confs: bool = False) -> DataFrame:
     )
 
 
-def correct_pipeline(
+def correct_span_lines(
     spans_df: DataFrame,
     corrector: CorrectorFn | None = None,
-    n_buckets: int | None = None,
-    bucket_filter: list[int] | None = None,
     conf_df: DataFrame | None = None,
     confmat_df: DataFrame | None = None,
     stateful_correct_docs=None,
-    with_confs: bool = False,
 ) -> DataFrame:
-    """End-to-end: spans table in → corrected spans table out.
+    """Spans table → corrected line rows (CORRECTED_LINE_SCHEMA plus the
+    JVM-side ``line_cer``): the line assembly and correction stages that
+    :func:`correct_pipeline` and ``checkpoint.run_resumable`` share, so
+    the resumable job runs the same plan as the flagship.
 
-    ``stateful_correct_docs`` (from
-    ``model.corrector.make_stateful_doc_corrector``) switches the
-    correction stage to the doc-sequential stateful path
-    (:func:`correct_lines_stateful`).
-
-    ``n_buckets``/``bucket_filter`` expose the checkpoint grain: when set,
-    only documents whose salt bucket is in the filter are processed
-    (checkpoint.resume drives this). ``conf_df`` is an optional per-line
-    confidence channel (doc_id, line_no, conf: array<float>) consumed by
-    conf-aware correctors (prob-line encoding, SURVEY §1.2);
-    ``confmat_df`` the analogous confusion-network channel
-    (doc_id, line_no, confmat — encoding 3, CONFMAT_SCHEMA)."""
-    # NARROW line assembly: each document row already holds its ordered
-    # span array, so the line grain comes from a per-row HOF slice
-    # (lines_from_span_arrays) — the former span-grain route (explode →
-    # prefix-scan → groupBy(doc_id, line_no) aggregation) paid an
-    # explode and a collect_list for data that was never ungrouped to
-    # begin with. ONE wide exchange remains: the line rows are
-    # hash-repartitioned to the UDF's compute-sized partition count
-    # (the explicit REPARTITION_BY_NUM defeats AQE's pre-UDF
-    # coalescing, the deliberate r4 property), and the correction stage
-    # (told via n_partitions=0 that the input is pre-partitioned) adds
-    # none. The stateful path partitions by doc_id alone so documents
-    # stay whole within a partition; line-grain keys otherwise keep the
-    # giant-document skew spread (pinned by the skew test).
+    NARROW line assembly: each document row already holds its ordered
+    span array, so the line grain comes from a per-row HOF slice
+    (lines_from_span_arrays) with no explode and no
+    groupBy(doc_id, line_no) aggregation. ONE wide exchange: the line rows are
+    hash-repartitioned to the UDF's compute-sized partition count
+    (the explicit REPARTITION_BY_NUM defeats AQE's pre-UDF
+    coalescing, the deliberate r4 property), and the correction stage
+    (told via n_partitions=0 that the input is pre-partitioned) adds
+    none. The stateful path partitions by doc_id alone so documents
+    stay whole within a partition; line-grain keys otherwise keep the
+    giant-document skew spread (pinned by the skew test)."""
     lines = lines_from_span_arrays(spans_df)
-    if n_buckets:
-        lines = lines.withColumn("bucket", salt_bucket(F.col("doc_id"), n_buckets))
-        if bucket_filter is not None:
-            lines = lines.filter(F.col("bucket").isin(bucket_filter))
-        lines = lines.drop("bucket")
     n_partitions = spans_df.sparkSession.sparkContext.defaultParallelism * 2
     if stateful_correct_docs is not None:
         lines = lines.repartition(n_partitions, "doc_id")
@@ -480,9 +461,42 @@ def correct_pipeline(
             "left",
         )
     if stateful_correct_docs is not None:
-        corrected = correct_lines_stateful(lines, stateful_correct_docs, n_partitions=0)
-    else:
-        corrected = correct_lines(lines, corrector, n_partitions=0)
+        return correct_lines_stateful(lines, stateful_correct_docs, n_partitions=0)
+    return correct_lines(lines, corrector, n_partitions=0)
+
+
+def correct_pipeline(
+    spans_df: DataFrame,
+    corrector: CorrectorFn | None = None,
+    n_buckets: int | None = None,
+    bucket_filter: list[int] | None = None,
+    conf_df: DataFrame | None = None,
+    confmat_df: DataFrame | None = None,
+    stateful_correct_docs=None,
+    with_confs: bool = False,
+) -> DataFrame:
+    """End-to-end: spans table in → corrected spans table out
+    (:func:`correct_span_lines` + :func:`reassemble`).
+
+    ``stateful_correct_docs`` (from
+    ``model.corrector.make_stateful_doc_corrector``) switches the
+    correction stage to the doc-sequential stateful path
+    (:func:`correct_lines_stateful`).
+
+    ``n_buckets``/``bucket_filter`` expose the checkpoint grain: when set,
+    only documents whose salt bucket is in the filter are processed.
+    ``conf_df`` is an optional per-line
+    confidence channel (doc_id, line_no, conf: array<float>) consumed by
+    conf-aware correctors (prob-line encoding, SURVEY §1.2);
+    ``confmat_df`` the analogous confusion-network channel
+    (doc_id, line_no, confmat — encoding 3, CONFMAT_SCHEMA)."""
+    if n_buckets and bucket_filter is not None:
+        spans_df = spans_df.filter(
+            salt_bucket(F.col("doc_id"), n_buckets).isin(bucket_filter)
+        )
+    corrected = correct_span_lines(
+        spans_df, corrector, conf_df, confmat_df, stateful_correct_docs
+    )
     return reassemble(corrected, with_confs=with_confs)
 
 

@@ -466,17 +466,18 @@ def read_pagexml_full(
     frames from it — the XML is parsed exactly once.
 
     ``channels=False`` (used by the spans-only ``read_pagexml`` front
-    door) keeps the schema but skips building and Arrow-shipping the
-    per-character confidence vectors and the JSON alternatives channel
-    — pass only what downstream consumes (guide §4.1).
+    door) returns the 2-column ``(doc_id, spans)`` frame instead,
+    parsed straight into Arrow: the per-character confidence vectors
+    and the JSON alternatives channel are neither built nor shipped —
+    pass only what downstream consumes (guide §4.1).
 
     ``n_partitions`` coalesces the scan (narrow, no shuffle) before
     parsing: binaryFile gives one split per file, and a corpus of many
     tiny page files would otherwise schedule one task per page
-    (measured: 500 tasks for 500 × ~3 KB). Defaults to 4× parallelism,
-    floored at the scan's own count — at real scale (millions of pages
-    on 1000 executors) the default keeps every core busy while
-    amortizing task launch over ~file_count/4k pages each.
+    (measured: 500 tasks for 500 × ~3 KB). Defaults to 2× parallelism
+    (a coalesce never raises the scan's own count) — at real scale
+    (millions of pages on 1000 executors) the default keeps every core
+    busy while amortizing task launch over ~file_count/2k pages each.
 
     Paths that are a single-directory glob ("dir/*.xml") or a bare
     directory are rewritten to a directory listing with

@@ -149,3 +149,109 @@ def test_real_kill9_mid_job_resume(spark, tmp_path):
         "doc_id", F.posexplode("spans").alias("i", "s"))
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_resumable_parses_each_page_once(spark, sf_small, tmp_path, monkeypatch):
+    """The input is staged once before the bucket loop: over a PAGE-XML
+    source, every page goes through the parse exactly once however many
+    buckets there are (the lazy parse used to re-run for each bucket),
+    and the job's output equals the flagship pipeline's, span for span."""
+    import os
+
+    from cor_asv_ann_spark.operators.correction import correct_pipeline
+    from cor_asv_ann_spark.sources import pagexml
+
+    pages = str(tmp_path / "pages")
+    n_pages = pagexml.synth_pagexml_corpus(spark, sf_small, pages, noisy=True)
+    acc = spark.sparkContext.accumulator(0)
+    parse_files = pagexml._parse_files_spans_arrow
+
+    def counting_parse(level, on_error="fail"):
+        parse = parse_files(level, on_error)
+
+        def counted(batches):
+            for batch in parse(batches):
+                acc.add(batch.num_rows)
+                yield batch
+
+        return counted
+
+    monkeypatch.setattr(pagexml, "_parse_files_spans_arrow", counting_parse)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    spans = pagexml.read_pagexml(spark, pages)
+    run_resumable(spark, spans, out, lin, run_id="once", n_buckets=4)
+    assert acc.value == n_pages
+    # the staged snapshot is gone once every bucket committed
+    assert sorted(os.listdir(out)) == [f"bucket={b}" for b in range(4)]
+    assert not any(f.startswith("_") for f in os.listdir(lin))
+
+    cols = ["doc_id", "spans", "span_confs"]
+    got = sorted(spark.read.parquet(out).select(*cols).collect())
+    want = sorted(correct_pipeline(spans, with_confs=True).select(*cols).collect())
+    assert len(got) == n_pages
+    assert got == want
+
+
+def test_lineage_mixes_spark_and_arrow_rows(spark, tmp_path):
+    """Lineage directories written by Spark (part-*.snappy.parquet +
+    _SUCCESS) stay readable next to the driver-written rows; a hidden
+    temporary file left by a kill between write and rename is no row;
+    Spark still reads the directory with LINEAGE_SCHEMA's types."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from cor_asv_ann_spark.checkpoint import append_lineage_row
+    from cor_asv_ann_spark.schema import LINEAGE_SCHEMA
+
+    lin = str(tmp_path / "lineage")
+
+    def row(run_id, b):
+        return {"run_id": run_id, "bucket": b, "n_docs": 1, "n_lines": 2,
+                "n_chars": 3, "sum_dist": 0.5, "cer": None, "wall_sec": 1.0,
+                "docs_per_sec": 1.0,
+                "finished_at": datetime.datetime.now(datetime.timezone.utc)}
+
+    spark.createDataFrame([row("r", 0), row("other", 1)], schema=LINEAGE_SCHEMA) \
+        .coalesce(1).write.mode("append").parquet(lin)
+    assert any(f.endswith(".snappy.parquet") for f in os.listdir(lin))
+    assert "_SUCCESS" in os.listdir(lin)
+    append_lineage_row(spark, lin, row("r", 2))
+    # a row written but never renamed into place
+    pq.write_table(pa.Table.from_pylist([row("r", 3)]), os.path.join(lin, ".part-x.parquet.tmp"))
+
+    assert completed_buckets(spark, lin, "r") == {0, 2}
+    assert completed_buckets(spark, lin, "other") == {1}
+    assert completed_buckets(spark, str(tmp_path / "missing"), "r") == set()
+    df = spark.read.parquet(lin)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    assert types == {f.name: f.dataType for f in LINEAGE_SCHEMA.fields}
+    assert isinstance(types["bucket"], T.IntegerType)
+    assert isinstance(types["finished_at"], T.TimestampType)
+    assert sorted(r.bucket for r in df.collect()) == [0, 1, 2]
+
+
+def test_empty_input_and_empty_bucket_commit(spark, tmp_path):
+    """A bucket without documents still commits a lineage row
+    (n_docs = 0), so a resume skips it instead of redoing it — for an
+    empty input and for an empty bucket of a non-empty input alike."""
+    from cor_asv_ann_spark.schema import SPANS_SCHEMA
+
+    one_doc = [("d1", [("word", "ſo", None, 0), ("newline", "\n", None, 2)])]
+    for name, rows, n_buckets in (("empty", [], 2), ("sparse", one_doc, 4)):
+        spans = spark.createDataFrame(rows, schema=SPANS_SCHEMA)
+        out, lin = str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_lin")
+        s1 = run_resumable(spark, spans, out, lin, run_id=name, n_buckets=n_buckets)
+        assert s1["buckets_skipped"] == 0
+        lineage = spark.read.parquet(lin).collect()
+        assert sorted(r.bucket for r in lineage) == list(range(n_buckets))
+        assert sum(r.n_docs for r in lineage) == len(rows)
+        assert sum(r.n_docs == 0 for r in lineage) == n_buckets - len(rows)
+        s2 = run_resumable(spark, spans, out, lin, run_id=name, n_buckets=n_buckets)
+        assert s2["buckets_skipped"] == n_buckets
+        assert spark.read.parquet(lin).count() == n_buckets
+    got = spark.read.parquet(str(tmp_path / "sparse_out")).collect()
+    assert [(r.doc_id, [s.text for s in r.spans]) for r in got] == [("d1", ["so", "\n"])]

@@ -271,3 +271,41 @@ def test_align_vote_lines_plan(spark, tmp_path):
     n_map = len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M))
     assert n_map == 4, plan  # 3 parses + 1 vote
     assert n_vote == 0
+
+
+def test_resumable_bucket_plan_is_the_flagship_plan(spark, sf_small, tmp_path, monkeypatch):
+    """Each bucket of checkpoint.run_resumable runs the flagship plan:
+    the narrow HOF line assembly (no groupBy(doc_id, line_no)
+    aggregate) and the flagship's exchange count over the same kind of
+    parquet source."""
+    import re
+
+    from pyspark.sql import DataFrameWriter
+
+    from cor_asv_ann_spark.checkpoint import run_resumable
+
+    src = str(tmp_path / "spans")
+    synth_spans(spark, sf_small, noisy=True).write.parquet(src)
+    spans = spark.read.parquet(src)
+    out = str(tmp_path / "out")
+    plans = []
+    write_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        if path.startswith(out):
+            plans.append(formatted_plan(self._df))
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    run_resumable(spark, spans, out, str(tmp_path / "lineage"), "plan", n_buckets=2)
+    assert len(plans) == 2
+
+    def n_exchanges(plan):
+        return len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
+
+    flagship = formatted_plan(correct_pipeline(spans, with_confs=True))
+    line_agg = re.compile(r"^Keys \[\d+\]: \[doc_id#\d+, line_no#\d+\]", re.M)
+    assert not line_agg.search(flagship)
+    for plan in plans:
+        assert not line_agg.search(plan), plan
+        assert n_exchanges(plan) == n_exchanges(flagship) == 2, plan
