@@ -17,6 +17,7 @@ Engine-parity notes baked into the oracles:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,7 +106,9 @@ _CONFUSE_SPARK = lambda c: F.translate(c, "etaoins", "€†‡•¶§µ")  # no
 # query reads it back (a real S1 scan) and the oracle reads the same files
 # with read_parquet — both engines see byte-identical input, so the
 # relational/pipeline layers above it are genuinely cross-checked.
-_ORACLE_DIR = "/root/repo/spark-warehouse/_oracle"
+_ORACLE_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "spark-warehouse", "_oracle"
+)
 _MATERIALIZED: set[str] = set()
 
 # no-silent-caps: the banded-join queries register a pyspark Observation
@@ -115,8 +118,6 @@ OBSERVATIONS: dict[str, object] = {}
 
 
 def _mat_spans(spark: SparkSession, sf_dir: str, noisy: bool = False, level: str = "word") -> str:
-    import os
-
     from cor_asv_ann_spark.sources.spans import synth_spans
 
     base = os.path.basename(os.path.normpath(sf_dir))
@@ -575,8 +576,6 @@ def _mat_affix_lexicon(spark):
     oracle replays the IV/OOV join from the same expanded entries —
     the centroids trick applied to the affix expander. Returns the
     lexicon frame."""
-    import os
-
     from cor_asv_ann_spark.operators.mark import lexicon_from_wordlist
 
     tag = "lexicon_affix"
@@ -669,8 +668,6 @@ def _mat_compound_parts(spark, sf_dir):
     materialized once per sf so the DuckDB oracle can replay compound
     acceptance as an independent existential join over the same parquet
     (the centroids trick applied to hunspell compounding)."""
-    import os
-
     base = os.path.basename(os.path.normpath(sf_dir))
     tag = f"compound_parts_{base}"
     path = f"{_ORACLE_DIR}/{tag}"
@@ -1189,13 +1186,8 @@ def q_pagexml_lines(spark, sf_dir):
     (7-word lines), so value-hash equality proves the whole
     serialize → reading-order walk → direction undo → span assembly
     loop is lossless (reference transcode.py:161-234,693-763 parity)."""
-    import os
-
-    from cor_asv_ann_spark.sources.pagexml import (
-        lines_of,
-        read_pagexml,
-        synth_pagexml_corpus,
-    )
+    from cor_asv_ann_spark.operators.correction import lines_of
+    from cor_asv_ann_spark.sources.pagexml import read_pagexml, synth_pagexml_corpus
 
     base = os.path.basename(os.path.normpath(sf_dir))
     tag = f"pagexml_{base}"
@@ -1208,10 +1200,10 @@ def q_pagexml_lines(spark, sf_dir):
     spans = read_pagexml(spark, out, level="word")
     # zero-exchange line assembly: the parse already yields each doc's
     # ordered span array in one row, so lines come from a per-row HOF
-    # (lines_of) instead of explode → prefix-scan → groupBy shuffle →
-    # concat. With no exchange left below the sort, the orderBy's
-    # range-bounds sampling would re-execute the WHOLE scan+parse —
-    # _ordered's barrier materializes it once (A/B-kept; see _ordered).
+    # slice (correction.lines_of). With no exchange left below the
+    # sort, the orderBy's range-bounds sampling would re-execute the
+    # WHOLE scan+parse — _ordered's barrier materializes it once
+    # (A/B-kept; see _ordered).
     return _ordered(lines_of(spans), "doc_id", "line_no")
 
 
@@ -1272,8 +1264,6 @@ def _mat_centroids(spark, sf_dir: str, n_cells: int = 16):
     """Deterministic IVF centroids, materialized once per sf so the
     DuckDB oracle can replay assignment/probe/verify from the same
     parquet (the _mat_spans trick applied to the coarse quantizer)."""
-    import os
-
     from cor_asv_ann_spark.operators.similarity import kmeans_centroids
 
     base = os.path.basename(os.path.normpath(sf_dir))

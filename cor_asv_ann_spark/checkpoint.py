@@ -56,14 +56,19 @@ from .schema import LINEAGE_SCHEMA
 _LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
-def completed_buckets(spark: SparkSession, lineage_dir: str, run_id: str) -> set[int]:
+def read_lineage(lineage_dir: str, run_id: str, columns: list[str]) -> pa.Table:
+    """``columns`` of the run's lineage rows, read with pyarrow (no
+    Spark job); an absent lineage directory reads as no rows."""
+    schema = pa.schema([_LINEAGE_ARROW.field(c) for c in ["run_id", *columns]])
     if not os.path.isdir(lineage_dir):
-        return set()
-    keys = _LINEAGE_ARROW.field("run_id"), _LINEAGE_ARROW.field("bucket")
-    rows = pds.dataset(lineage_dir, schema=pa.schema(keys), format="parquet").to_table(
-        columns=["bucket"], filter=pds.field("run_id") == run_id
+        return schema.empty_table().select(columns)
+    return pds.dataset(lineage_dir, schema=schema, format="parquet").to_table(
+        columns=columns, filter=pds.field("run_id") == run_id
     )
-    return set(rows.column("bucket").to_pylist())
+
+
+def completed_buckets(spark: SparkSession, lineage_dir: str, run_id: str) -> set[int]:
+    return set(read_lineage(lineage_dir, run_id, ["bucket"]).column("bucket").to_pylist())
 
 
 def append_lineage_row(spark: SparkSession, lineage_dir: str, row: dict) -> None:

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corelib.nway import align_and_vote
-from .correction import lines_from_span_arrays
+from .correction import lines_of
 
 VOTED_SCHEMA = T.StructType(
     [
@@ -32,17 +32,6 @@ VOTED_SCHEMA = T.StructType(
         T.StructField("n_inputs", T.IntegerType(), False),
     ]
 )
-
-
-def lines_of(spans_df: DataFrame) -> DataFrame:
-    """Spans table → (doc_id, line_no, line_text). Narrow per-row HOF
-    line assembly (lines_from_span_arrays) — no explode/prefix-scan/
-    groupBy detour; each join input stays shuffle-free until the join
-    itself."""
-    lines = lines_from_span_arrays(spans_df)
-    return lines.select(
-        "doc_id", "line_no", F.expr("concat_ws('', texts)").alias("line_text")
-    )
 
 
 def align_vote_groups(

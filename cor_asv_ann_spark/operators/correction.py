@@ -5,9 +5,8 @@ Dataflow (north-star shape, BASELINE.json):
     read spans table
       → cut each document's span array into lines at its newline spans
         (``lines_from_span_arrays``: a per-row HOF slice — no explode,
-        no aggregation)
-      → optional salt bucket filter (pmod(xxhash64(doc_id), B)) used by
-        the checkpoint/lineage layer for resumable per-bucket runs
+        no aggregation; it is the only code that finds line boundaries —
+        every other line or span view projects its line frame)
       → repartition(2×cores, doc_id, line_no): this hash redistribution
         at *line* grain is what defeats long-document skew (a
         10^6-span document becomes 10^5 independent line rows instead
@@ -43,50 +42,32 @@ from ..schema import CORRECTED_LINE_SCHEMA, WS_KINDS
 TEXT_KINDS = ("line", "word", "glyph", "space", "newline")
 
 
-def spans_with_line_no(df: DataFrame) -> DataFrame:
-    """(doc_id, spans) → (doc_id, kind, text, media_ref, offset, line_no)
-    at span grain, line_no computed by an array prefix-scan (narrow)."""
-    line_nos = F.expr(
-        """
-        aggregate(
-          spans,
-          struct(0 as n, cast(array() as array<int>) as ls),
-          (acc, s) -> struct(
-            acc.n + IF(s.kind = 'newline', 1, 0),
-            array_append(acc.ls, acc.n)),
-          acc -> acc.ls)
-        """
-    ).alias("line_nos")
-    z = df.select("doc_id", F.arrays_zip(F.col("spans"), line_nos).alias("z"))
-    e = z.select("doc_id", F.explode("z").alias("s")).select(
-        "doc_id",
-        F.col("s.spans.kind").alias("kind"),
-        F.col("s.spans.text").alias("text"),
-        F.col("s.spans.media_ref").alias("media_ref"),
-        F.col("s.spans.offset").alias("offset"),
-        F.col("s.line_nos").alias("line_no"),
-    )
-    return e
-
-
 def lines_from_span_arrays(spans_df: DataFrame) -> DataFrame:
-    """(doc_id, spans) at DOC grain → the assemble_lines line grain
-    (doc_id, line_no, kinds, texts, media_refs, offsets) WITHOUT the
-    span-grain detour: no explode, no O(n²) prefix-scan, no
-    groupBy(doc_id, line_no) aggregation — each line is a contiguous
-    slice of the document's span array, split on newline spans, as a
-    pure per-row HOF (guide §2.4: the data already arrives grouped the
-    way the operation needs).
+    """(doc_id, spans) at DOC grain → line grain
+    (doc_id, line_no, kinds, texts, media_refs, offsets): the one place
+    that finds line boundaries. Each line is a contiguous slice of the
+    document's span array, split on newline spans, as a pure per-row
+    HOF — no explode, no aggregation (guide §2.4: the data already
+    arrives grouped the way the operation needs). A newline span
+    terminates (and belongs to) its line; a trailing segment after the
+    last newline (or a document with no newline at all) becomes its own
+    line; an empty span array yields no rows.
 
-    Contract (same as the span-grain path de facto relies on): the
-    span array is offset-ordered — spans_with_line_no's prefix scan
-    counts newlines in ARRAY order, so an unordered array never
-    produced meaningful lines there either. A trailing segment after
-    the last newline (or a document with no newline at all) becomes its
-    own line, exactly as the prefix scan numbered it."""
-    nl = F.expr(
-        "filter(transform(spans, (s, i) -> IF(s.kind = 'newline', i, -1)),"
-        " x -> x >= 0)"
+    Contract: each span array is offset-ordered. It is checked, not
+    assumed — a row whose offsets do not strictly increase fails the
+    query (assert_true) instead of slicing its lines in array order."""
+    ordered = F.assert_true(
+        F.expr(
+            "size(filter(spans, (s, i) -> i > 0 AND s.offset <= spans[i - 1].offset)) = 0"
+        ),
+        F.lit("lines_from_span_arrays: span offsets must strictly increase in each row"),
+    )
+    nl = F.coalesce(
+        ordered,
+        F.expr(
+            "filter(transform(spans, (s, i) -> IF(s.kind = 'newline', i, -1)),"
+            " x -> x >= 0)"
+        ),
     )
     ends = F.expr(
         """
@@ -118,6 +99,29 @@ def lines_from_span_arrays(spans_df: DataFrame) -> DataFrame:
             F.expr("transform(l.sp, x -> x.media_ref)").alias("media_refs"),
             F.expr("transform(l.sp, x -> x.offset)").alias("offsets"),
         )
+    )
+
+
+def lines_of(spans_df: DataFrame) -> DataFrame:
+    """Spans table → (doc_id, line_no, line_text): the text view of
+    :func:`lines_from_span_arrays`, shuffle-free."""
+    return lines_from_span_arrays(spans_df).select(
+        "doc_id", "line_no", F.concat_ws("", "texts").alias("line_text")
+    )
+
+
+def spans_with_line_no(df: DataFrame) -> DataFrame:
+    """(doc_id, spans) → span grain (doc_id, kind, text, media_ref,
+    offset, line_no): the line frame of :func:`lines_from_span_arrays`
+    exploded back to one row per span."""
+    s = F.explode(F.arrays_zip("kinds", "texts", "media_refs", "offsets")).alias("s")
+    return lines_from_span_arrays(df).select("doc_id", "line_no", s).select(
+        "doc_id",
+        F.col("s.kinds").alias("kind"),
+        F.col("s.texts").alias("text"),
+        F.col("s.media_refs").alias("media_ref"),
+        F.col("s.offsets").alias("offset"),
+        "line_no",
     )
 
 
@@ -468,8 +472,6 @@ def correct_span_lines(
 def correct_pipeline(
     spans_df: DataFrame,
     corrector: CorrectorFn | None = None,
-    n_buckets: int | None = None,
-    bucket_filter: list[int] | None = None,
     conf_df: DataFrame | None = None,
     confmat_df: DataFrame | None = None,
     stateful_correct_docs=None,
@@ -483,17 +485,11 @@ def correct_pipeline(
     correction stage to the doc-sequential stateful path
     (:func:`correct_lines_stateful`).
 
-    ``n_buckets``/``bucket_filter`` expose the checkpoint grain: when set,
-    only documents whose salt bucket is in the filter are processed.
     ``conf_df`` is an optional per-line
     confidence channel (doc_id, line_no, conf: array<float>) consumed by
     conf-aware correctors (prob-line encoding, SURVEY §1.2);
     ``confmat_df`` the analogous confusion-network channel
     (doc_id, line_no, confmat — encoding 3, CONFMAT_SCHEMA)."""
-    if n_buckets and bucket_filter is not None:
-        spans_df = spans_df.filter(
-            salt_bucket(F.col("doc_id"), n_buckets).isin(bucket_filter)
-        )
     corrected = correct_span_lines(
         spans_df, corrector, conf_df, confmat_df, stateful_correct_docs
     )

@@ -77,15 +77,24 @@ def asword_normalizer(charmap: "dict[str, str] | None"):
 
 
 def words_from_spans(spans_df: DataFrame) -> DataFrame:
-    """Spans table → one row per word span with line/word positions."""
-    from .correction import spans_with_line_no
+    """Spans table → one row per word span with line/word positions:
+    a posexplode of each line's word spans, narrow (no window, no
+    exchange)."""
+    from .correction import lines_from_span_arrays
 
-    flat = spans_with_line_no(spans_df)
-    w = Window.partitionBy("doc_id", "line_no").orderBy("offset")
+    words = F.expr(
+        "filter(arrays_zip(kinds, texts, offsets), x -> x.kinds = 'word')"
+    )
     return (
-        flat.filter(F.col("kind") == "word")
-        .withColumn("word_idx", F.row_number().over(w) - 1)
-        .select("doc_id", "line_no", "word_idx", F.col("text").alias("word"), "offset")
+        lines_from_span_arrays(spans_df)
+        .select("doc_id", "line_no", F.posexplode(words).alias("word_idx", "w"))
+        .select(
+            "doc_id",
+            "line_no",
+            "word_idx",
+            F.col("w.texts").alias("word"),
+            F.col("w.offsets").alias("offset"),
+        )
     )
 
 

@@ -162,7 +162,7 @@ def compare_runs(
 ) -> DataFrame:
     """scripts/compare.py analogue: line-by-line comparison of two
     correction outputs — per-line distance + which lines differ."""
-    from .align_groups import lines_of
+    from .correction import lines_of
 
     a = lines_of(run_a).withColumnRenamed("line_text", "text_a")
     b = lines_of(run_b).withColumnRenamed("line_text", "text_b")

@@ -549,47 +549,6 @@ def spans_of(full: DataFrame) -> DataFrame:
     return full.select("doc_id", "spans")
 
 
-def lines_of(spans: DataFrame) -> DataFrame:
-    """(doc_id, spans) → (doc_id, line_no int, line_text) with ZERO
-    exchanges: the parser already emits each document's spans offset-
-    ordered in ONE array row, so line assembly is a per-row HOF —
-    newline positions, then a slice + array_join per line — instead of
-    the generic span-grain route (explode → prefix-scan →
-    groupBy(doc_id, line_no) shuffle → concat) that exists for inputs
-    arriving AT span grain (guide §2.4: remove shuffles outright when
-    the data is already grouped the way the operation needs).
-
-    Semantics mirror spans_with_line_no + assemble_lines + concat_ws
-    exactly: a newline span terminates (and belongs to) its line, every
-    parser line ends in one, empty span arrays yield no rows."""
-    nl = F.expr(
-        "filter(transform(spans, (s, i) -> IF(s.kind = 'newline', i, -1)),"
-        " x -> x >= 0)"
-    )
-    # for line j (0-based), element_at(nl, j) is 1-based ⇒ the PREVIOUS
-    # newline's 0-based position; slice() is 1-based
-    lines = F.expr(
-        """
-        transform(_nl, (e, j) -> struct(
-          j as line_no,
-          array_join(transform(slice(spans,
-                                     IF(j = 0, 0, element_at(_nl, j) + 1) + 1,
-                                     e - IF(j = 0, 0, element_at(_nl, j) + 1) + 1),
-                               x -> x.text), '') as line_text))
-        """
-    )
-    return (
-        spans.select("doc_id", "spans")
-        .withColumn("_nl", nl)
-        .select("doc_id", F.explode(lines).alias("l"))
-        .select(
-            "doc_id",
-            F.col("l.line_no").cast("int").alias("line_no"),
-            F.col("l.line_text").alias("line_text"),
-        )
-    )
-
-
 def conf_channel(full: DataFrame) -> DataFrame:
     """(doc_id, line_no, conf array<float>) — prob-line channel."""
     return full.select(

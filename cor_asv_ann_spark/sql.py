@@ -30,7 +30,7 @@ def register_spans(spark: SparkSession, sf_dir: str) -> None:
     """Register the interleaved span tables (GT + noisy) and their
     exploded/line-grain views — the shapes every correction query
     starts from."""
-    from .operators.correction import assemble_lines, spans_with_line_no
+    from .operators.correction import lines_from_span_arrays, spans_with_line_no
     from .sources.spans import synth_spans
 
     gt = synth_spans(spark, sf_dir, noisy=False)
@@ -39,8 +39,8 @@ def register_spans(spark: SparkSession, sf_dir: str) -> None:
     noisy.createOrReplaceTempView("spans_ocr")
     spans_with_line_no(gt).createOrReplaceTempView("spans_gt_flat")
     spans_with_line_no(noisy).createOrReplaceTempView("spans_ocr_flat")
-    assemble_lines(spans_with_line_no(gt)).createOrReplaceTempView("lines_gt")
-    assemble_lines(spans_with_line_no(noisy)).createOrReplaceTempView("lines_ocr")
+    lines_from_span_arrays(gt).createOrReplaceTempView("lines_gt")
+    lines_from_span_arrays(noisy).createOrReplaceTempView("lines_ocr")
 
 
 def register_all(spark: SparkSession, sf_dir: str) -> None:

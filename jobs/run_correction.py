@@ -93,7 +93,7 @@ def main() -> None:
         )
         args.pagexml_in, args.pagexml_out = mets_paths, mets_out
 
-    from cor_asv_ann_spark.checkpoint import run_resumable
+    from cor_asv_ann_spark.checkpoint import read_lineage, run_resumable
     from cor_asv_ann_spark.session import build_session
     from cor_asv_ann_spark.sources.spans import read_spans, synth_spans
 
@@ -196,21 +196,17 @@ def main() -> None:
 
             summary["mets_registered"] = mets_register(
                 _glob.glob(f"{args.pagexml_out}/*.xml"))
-    lineage = spark.read.parquet(args.lineage)
-    from pyspark.sql import functions as F
+    import pyarrow.compute as pc
 
-    m = lineage.filter(F.col("run_id") == args.run_id).agg(
-        F.sum("n_docs").alias("docs"),
-        F.sum("n_lines").alias("lines"),
-        F.sum("wall_sec").alias("wall"),
-        F.avg("cer").alias("cer"),
-    ).collect()[0]
+    m = read_lineage(args.lineage, args.run_id, ["n_docs", "n_lines", "wall_sec", "cer"])
+    docs, lines, wall = (pc.sum(m[c]).as_py() for c in ("n_docs", "n_lines", "wall_sec"))
+    cer = pc.mean(m["cer"]).as_py()  # nulls skipped
     summary.update(
-        n_docs=int(m.docs or 0),
-        n_lines=int(m.lines or 0),
-        wall_sec=round(float(m.wall or 0), 2),
-        docs_per_sec=round((m.docs or 0) / m.wall, 1) if m.wall else None,
-        mean_cer=round(float(m.cer), 6) if m.cer is not None else None,
+        n_docs=int(docs or 0),
+        n_lines=int(lines or 0),
+        wall_sec=round(float(wall or 0), 2),
+        docs_per_sec=round((docs or 0) / wall, 1) if wall else None,
+        mean_cer=round(float(cer), 6) if cer is not None else None,
     )
     print(json.dumps(summary))
     spark.stop()

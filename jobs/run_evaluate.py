@@ -87,7 +87,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from cor_asv_ann_spark.operators.align_groups import lines_of
+    from cor_asv_ann_spark.operators.correction import lines_of
     from cor_asv_ann_spark.operators.report import evaluation_report, report_json
     from cor_asv_ann_spark.session import build_session
     from cor_asv_ann_spark.sources.spans import read_spans, synth_spans

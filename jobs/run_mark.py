@@ -86,7 +86,6 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from cor_asv_ann_spark.operators.correction import spans_with_line_no
     from cor_asv_ann_spark.operators.mark import (
         dehyphenate_recheck,
         lexicon_and_compound,
@@ -117,7 +116,9 @@ def main() -> None:
     # doc, so one broadcast-free equi-join on (doc_id, offset) + the
     # doc-keyed reassembly exchange (same class as the correction
     # pipeline's W2 collect_list)
-    flat = spans_with_line_no(spans_df)
+    flat = spans_df.select("doc_id", F.explode("spans").alias("s")).select(
+        "doc_id", "s.*"
+    )
     # original per-span confidences ride along so IV words keep their
     # input @conf (the reference only touches UNKNOWN words,
     # wrapper/mark.py:128-133)

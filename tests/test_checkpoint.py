@@ -1,12 +1,15 @@
 """Resume-from-lineage: a killed run must not recompute completed
 buckets, and the resumed output must equal a clean full run."""
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
 
 from cor_asv_ann_spark.checkpoint import completed_buckets, run_resumable
 from cor_asv_ann_spark.sources.spans import synth_spans
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_resume_skips_completed_buckets(spark, sf_small, tmp_path):
@@ -101,7 +104,7 @@ def test_real_kill9_mid_job_resume(spark, tmp_path):
     clean_out = str(tmp_path / "clean_out")
     r = subprocess.run(
         base + ["--output", clean_out, "--lineage", str(tmp_path / "clean_lin"),],
-        capture_output=True, text=True, cwd="/root/repo", timeout=900)
+        capture_output=True, text=True, cwd=ROOT, timeout=900)
     assert r.returncode == 0, r.stderr[-2000:]
 
     # killed run: SIGKILL the whole process group once >=2 buckets
@@ -110,7 +113,7 @@ def test_real_kill9_mid_job_resume(spark, tmp_path):
     lin = str(tmp_path / "lin")
     p = subprocess.Popen(
         base + ["--output", out, "--lineage", lin],
-        cwd="/root/repo", start_new_session=True,
+        cwd=ROOT, start_new_session=True,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, env=env)
     killed = False
     deadline = time.time() + 600
@@ -132,7 +135,7 @@ def test_real_kill9_mid_job_resume(spark, tmp_path):
     # resumed run: same run-id, same output + lineage dirs
     r2 = subprocess.run(
         base + ["--output", out, "--lineage", lin],
-        capture_output=True, text=True, cwd="/root/repo", timeout=900)
+        capture_output=True, text=True, cwd=ROOT, timeout=900)
     assert r2.returncode == 0, r2.stderr[-2000:]
     import json
 
@@ -255,3 +258,45 @@ def test_empty_input_and_empty_bucket_commit(spark, tmp_path):
         assert spark.read.parquet(lin).count() == n_buckets
     got = spark.read.parquet(str(tmp_path / "sparse_out")).collect()
     assert [(r.doc_id, [s.text for s in r.spans]) for r in got] == [("d1", ["so", "\n"])]
+
+
+def test_job_summary_equals_lineage_sums(spark, sf_small, tmp_path):
+    """jobs/run_correction.py prints its closing summary from the run's
+    lineage rows (read with pyarrow): the totals, the wall-clock rate
+    and the CER mean with null rows skipped, over this run's rows only —
+    here one bucket committed before the job started (cer null) and a
+    row of another run."""
+    import datetime
+    import json
+    import subprocess
+    import sys
+
+    from cor_asv_ann_spark.checkpoint import append_lineage_row
+
+    lin = str(tmp_path / "lineage")
+    for run_id in ("sum", "other"):
+        append_lineage_row(spark, lin, {
+            "run_id": run_id, "bucket": 0, "n_docs": 7, "n_lines": 70,
+            "n_chars": 700, "sum_dist": 0.0, "cer": None, "wall_sec": 0.5,
+            "docs_per_sec": 14.0,
+            "finished_at": datetime.datetime.now(datetime.timezone.utc)})
+    r = subprocess.run(
+        [sys.executable, "jobs/run_correction.py", "--sf-dir", sf_small,
+         "--buckets", "3", "--cpus", "2", "--run-id", "sum",
+         "--output", str(tmp_path / "out"), "--lineage", lin],
+        capture_output=True, text=True, cwd=ROOT, timeout=900)
+    assert r.returncode == 0, r.stderr[-2000:]
+    rep = json.loads(r.stdout.strip().splitlines()[-1])
+    assert rep["buckets_skipped"] == 1
+
+    rows = spark.read.parquet(lin).filter(F.col("run_id") == "sum").collect()
+    assert len(rows) == 3
+    docs = sum(x.n_docs for x in rows)
+    wall = sum(x.wall_sec for x in rows)
+    cers = [x.cer for x in rows if x.cer is not None]
+    assert len(cers) == 2
+    assert rep["n_docs"] == docs > 7
+    assert rep["n_lines"] == sum(x.n_lines for x in rows)
+    assert rep["wall_sec"] == round(wall, 2)
+    assert rep["docs_per_sec"] == round(docs / wall, 1)
+    assert rep["mean_cer"] == round(sum(cers) / len(cers), 6)

@@ -7,14 +7,17 @@ pipeline's output must match GT on every (kind, text, media_ref, offset)
 """
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cor_asv_ann_spark.operators.correction import (
     assemble_lines,
     correct_pipeline,
+    lines_from_span_arrays,
     pipeline_metrics,
     spans_with_line_no,
 )
+from cor_asv_ann_spark.schema import SPANS_SCHEMA
 from cor_asv_ann_spark.sources.spans import synth_spans
 
 
@@ -90,15 +93,98 @@ def test_pipeline_metrics(noisy):
     assert 0.0 < m.mean_line_cer < 1.0  # noise was actually corrected away
 
 
-def test_bucket_filter_partitions_work(noisy, gt):
-    """Processing buckets separately and unioning equals processing all
-    at once (the checkpoint/resume correctness property)."""
-    full = correct_pipeline(noisy).select("doc_id", F.explode("spans").alias("s"))
-    parts = None
-    for b in range(4):
-        p = correct_pipeline(noisy, n_buckets=4, bucket_filter=[b]).select(
-            "doc_id", F.explode("spans").alias("s")
+@pytest.fixture(scope="module")
+def edge(spark):
+    """Hand-built rows at the edges of line slicing: a trailing segment
+    with no newline, a document with no newline, an empty span array
+    and a media-only line."""
+
+    def doc(doc_id, *spans):
+        return (doc_id, [(k, t, m, o) for o, (k, t, m) in enumerate(spans)])
+
+    w, sp, nl = ("word", "a", None), ("space", " ", None), ("newline", "\n", None)
+    media = ("media", "", "img/1.png")
+    return spark.createDataFrame(
+        [
+            doc("trailing", w, sp, w, nl, w, sp, w),
+            doc("no_newline", w, sp, w),
+            doc("empty"),
+            doc("media_line", w, nl, media, nl, w, nl),
+        ],
+        SPANS_SCHEMA,
+    )
+
+
+@pytest.fixture(scope="module")
+def line_inputs(spark, gt, edge, tmp_path_factory):
+    from cor_asv_ann_spark.sources.pagexml import read_pagexml, synth_page_xml
+
+    pages = tmp_path_factory.mktemp("pages")
+    for did in map(str, range(40)):
+        text = "".join(f"w{did} x{i} y\n" for i in range(int(did) % 5 + 1))
+        (pages / f"{did}.xml").write_bytes(synth_page_xml(did, text))
+    return {
+        "synth_gt": gt,
+        "pagexml": read_pagexml(spark, str(pages)).cache(),
+        "edge": edge,
+    }
+
+
+@pytest.mark.parametrize("name", ["synth_gt", "pagexml", "edge"])
+def test_line_no_is_the_newline_prefix_count(line_inputs, name):
+    """Each span's line_no equals the number of newline spans before it
+    in offset order (an independent window count), and the span-grain
+    route through assemble_lines equals lines_from_span_arrays."""
+    df = line_inputs[name]
+    flat = spans_with_line_no(df)
+    assert flat.columns == ["doc_id", "kind", "text", "media_ref", "offset", "line_no"]
+    before = Window.partitionBy("doc_id").orderBy("offset").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    ref = (
+        df.select("doc_id", F.explode("spans").alias("s"))
+        .select("doc_id", "s.*")
+        .withColumn(
+            "line_no",
+            F.coalesce(
+                F.sum((F.col("kind") == "newline").cast("int")).over(before), F.lit(0)
+            ),
         )
-        parts = p if parts is None else parts.unionByName(p)
-    assert full.exceptAll(parts).count() == 0
-    assert parts.exceptAll(full).count() == 0
+    )
+    assert ref.count() == flat.count() > 0
+    assert ref.exceptAll(flat.select(*ref.columns)).count() == 0
+    via_spans = assemble_lines(flat)
+    direct = lines_from_span_arrays(df)
+    assert via_spans.columns == direct.columns
+    assert via_spans.exceptAll(direct).count() == 0
+    assert direct.exceptAll(via_spans).count() == 0
+
+
+def test_edge_rows_line_split(edge):
+    got = {
+        (r.doc_id, r.line_no): (list(r.kinds), list(r.offsets))
+        for r in lines_from_span_arrays(edge).collect()
+    }
+    assert got == {
+        ("trailing", 0): (["word", "space", "word", "newline"], [0, 1, 2, 3]),
+        ("trailing", 1): (["word", "space", "word"], [4, 5, 6]),
+        ("no_newline", 0): (["word", "space", "word"], [0, 1, 2]),
+        ("media_line", 0): (["word", "newline"], [0, 1]),
+        ("media_line", 1): (["media", "newline"], [2, 3]),
+        ("media_line", 2): (["word", "newline"], [4, 5]),
+    }
+
+
+def test_unordered_span_array_fails_loudly(spark):
+    """Line slicing assumes offset-ordered span arrays; a reversed array
+    must fail the query, not yield lines cut in array order."""
+    rows = [("rev", [("word", "b", None, 2), ("space", " ", None, 1),
+                     ("word", "a", None, 0)])]
+    rev = spark.createDataFrame(rows, SPANS_SCHEMA)
+    with pytest.raises(Exception, match="offsets must strictly increase"):
+        lines_from_span_arrays(rev).collect()
+    dup = spark.createDataFrame(
+        [("dup", [("word", "a", None, 0), ("word", "b", None, 0)])], SPANS_SCHEMA
+    )
+    with pytest.raises(Exception, match="offsets must strictly increase"):
+        spans_with_line_no(dup).collect()

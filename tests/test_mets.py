@@ -7,6 +7,7 @@ inputs via workspace.mets.find_files)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import xml.etree.ElementTree as ET
@@ -22,6 +23,8 @@ from cor_asv_ann_spark.sources.mets import (
     resolve_workspace,
     synth_mets,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _NS_PAGE = "http://schema.primaresearch.org/PAGE/gts/pagecontent/2019-07-15"
 
@@ -130,7 +133,7 @@ def test_mets_cli_front_door(tmp_path):
         [sys.executable, "jobs/run_align.py", "--mets", mets,
          "-I", "OCR1,OCR2,OCR3", "-O", "ALIGNED",
          "--method", "majority", "--cpus", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -167,7 +170,7 @@ def test_mets_cli_front_door(tmp_path):
         [sys.executable, "jobs/run_mark.py", "--mets", mets,
          "-I", "WORDS", "-O", "MARKED",
          "--dict", str(tmp_path / "words.dic"), "--cpus", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])

@@ -60,7 +60,7 @@ def test_align_vote_groups_spark(spark, sf_small):
     noisy = synth_spans(spark, sf_small, noisy=True)
     # three "engines": GT, noisy, GT — majority recovers GT everywhere
     voted = align_vote_groups([gt, noisy, gt], method="majority")
-    from cor_asv_ann_spark.operators.align_groups import lines_of
+    from cor_asv_ann_spark.operators.correction import lines_of
 
     ref = lines_of(gt).withColumnRenamed("line_text", "gt_text")
     cmp_ = voted.join(ref, ["doc_id", "line_no"])

@@ -71,7 +71,7 @@ def test_repl_transcode_line(tmp_path):
     r = subprocess.run(
         [sys.executable, "jobs/repl.py"],
         input="transcode_line('hello!')\n",
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert r.returncode == 0, r.stderr[-1500:]
     assert "greedy (ppl=" in r.stdout
@@ -124,7 +124,7 @@ def test_run_proc_file_to_file(spark, tmp_path):
          "--new-suffix", ".cor.txt",
          str(tmp_path / "a.txt"), str(tmp_path / "b.tsv"),
          str(tmp_path / "c.pkl")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -248,7 +248,7 @@ def test_run_proc_confmat_pickle(spark, tmp_path):
          "tests/fixtures/trained_w64_d1.npz", "--fast", "--cpus", "4",
          "--old-suffix", ".bogus", "--new-suffix", ".cor.txt",
          str(tmp_path / "cm.pkl"), str(tmp_path / "pl.pkl")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -324,7 +324,7 @@ def test_run_mark_pagexml_workspace(tmp_path):
              "--pagexml-out", str(tmp_path / out_name),
              "--dict", str(tmp_path / "de.dic"),
              "--format", fmt, "--cpus", "4"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=600,
+            capture_output=True, text=True, cwd=ROOT, timeout=600,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         return json.loads(r.stdout.strip().splitlines()[-1])
@@ -399,7 +399,7 @@ def test_run_align_join_evaluate_workspaces(tmp_path):
     def run(job, *extra):
         r = subprocess.run(
             [sys.executable, f"jobs/{job}", *extra, "--cpus", "4"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=600,
+            capture_output=True, text=True, cwd=ROOT, timeout=600,
         )
         assert r.returncode == 0, (job, r.stderr[-2000:])
         return r.stdout.strip().splitlines()[-1]
@@ -425,7 +425,7 @@ def test_run_align_join_evaluate_workspaces(tmp_path):
         [sys.executable, "jobs/run_align.py", "--pagexml-in",
          str(tmp_path / "a"), str(tmp_path / "b"),
          "--pagexml-out", str(tmp_path / "x"), "--method", "majority"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert r.returncode != 0 and "more than 2" in r.stderr
 
@@ -491,7 +491,7 @@ def test_match_on_coords(tmp_path):
          str(tmp_path / "a"), str(tmp_path / "b"),
          "--pagexml-out", str(tmp_path / "joined"),
          "--match-on", "coords", "--cpus", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -504,7 +504,7 @@ def test_match_on_coords(tmp_path):
          str(tmp_path / "a"), str(tmp_path / "b"),
          "--match-on", "coords",
          "--out", str(tmp_path / "rep.json"), "--cpus", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads((tmp_path / "rep.json").read_text())

@@ -8,6 +8,7 @@ concatenate to the line-level text result)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -18,6 +19,8 @@ from cor_asv_ann_spark.sources.pagexml import (
     parse_page_xml,
     synth_page_xml,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BASE = (
     "the quick brown fox jumps over a lazy dog near the old mill by the "
@@ -232,7 +235,7 @@ def test_page_to_spans_tool(tmp_path):
          "--confmat-out", str(tmp_path / "cm_pq"),
          "--conf-out", str(tmp_path / "conf_pq"),
          str(pages)],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -352,7 +355,7 @@ def test_run_correction_pagexml_front_door(tmp_path):
          "--lineage", str(tmp_path / "lineage"), "--run-id", "px",
          "--buckets", "2", "--cpus", "4",
          "--pagexml-out", str(tmp_path / "pages_out")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -397,7 +400,7 @@ def test_run_correction_confmat_channel(tmp_path):
          "--lineage", str(tmp_path / "lineage"), "--run-id", "cm",
          "--buckets", "2", "--cpus", "4",
          "--pagexml-out", str(tmp_path / "pages_out")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     from cor_asv_ann_spark.sources.pagexml import parse_page_xml
@@ -551,7 +554,7 @@ def test_model_confs_reach_pagexml_sink(tmp_path):
          "--lineage", str(tmp_path / "lin"), "--run-id", "cf",
          "--buckets", "1", "--cpus", "4",
          "--pagexml-out", str(tmp_path / "pages_out")],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     for f in sorted((tmp_path / "pages_out").glob("*.xml")):

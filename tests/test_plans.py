@@ -203,6 +203,19 @@ def test_mark_affix_lexicon_broadcasts(spark, sf_small, tmp_path):
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 1
 
 
+def test_words_from_spans_is_narrow(spark, sf_small, tmp_path):
+    """Word positions come from a posexplode of the line frame: no
+    window over (doc_id, line_no), hence no exchange at all."""
+    import re
+
+    from cor_asv_ann_spark.operators.mark import words_from_spans
+
+    src = str(tmp_path / "spans")
+    synth_spans(spark, sf_small).write.parquet(src)
+    plan = formatted_plan(words_from_spans(spark.read.parquet(src)))
+    assert not re.findall(r"^\(\d+\) (Exchange|Window)", plan, re.M), plan
+
+
 def test_pagexml_ingest_single_wide_exchange(spark, tmp_path):
     """PAGE-XML ingest scale pin: scan (column-pruned to path+content)
     → Coalesce (narrow — no one-task-per-tiny-file storm) → ONE

@@ -1,7 +1,11 @@
 """SQL-first usage: the registered views answer the engine's queries in
 plain spark.sql."""
 
+import os
+
 from cor_asv_ann_spark.sql import register_all
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_sql_surface(spark, sf_small):
@@ -48,7 +52,7 @@ def test_driver_contract_keys_aligned():
     bench.py's suite list must name real queries."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as e
 
     q, o = set(e.queries()), set(e.oracle_sql())
@@ -56,11 +60,11 @@ def test_driver_contract_keys_aligned():
 
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
+    spec = importlib.util.spec_from_file_location("bench", f"{ROOT}/bench.py")
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     # the suite list lives inside main(); pull it from the source text
-    src = open("/root/repo/bench.py").read()
+    src = open(f"{ROOT}/bench.py").read()
     import re
 
     block = re.search(r"bench_queries = \[(.*?)\]", src, re.S).group(1)

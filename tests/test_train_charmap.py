@@ -5,7 +5,7 @@ compare_runs operator."""
 import pytest
 from pyspark.sql import functions as F
 
-from cor_asv_ann_spark.operators.align_groups import lines_of
+from cor_asv_ann_spark.operators.correction import lines_of
 from cor_asv_ann_spark.operators.correction import correct_pipeline
 from cor_asv_ann_spark.operators.train_charmap import (
     compare_runs,

@@ -2,6 +2,8 @@
 finite differences, local overfit convergence, and distributed-vs-local
 gradient parity."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -17,6 +19,8 @@ from cor_asv_ann_spark.model.train_np import (
     train_local,
     vectorize_pairs,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def tiny_setup(width=6, chars="ab \n", seed=3, depth=1):
@@ -259,7 +263,7 @@ def test_run_train_job_val_bounded(tmp_path):
     r = subprocess.run(
         [sys.executable, "jobs/run_train.py", "--data", str(p), "--out", str(out),
          "--width", "12", "--epochs", "1", "--cpus", "2", "--val-cap", "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -465,7 +469,7 @@ def test_run_train_job_lm_transfer_cli(tmp_path):
         [sys.executable, "jobs/run_train.py", "--data", str(p), "--out",
          str(lm_out), "--width", "12", "--epochs", "2", "--cpus", "2",
          "--lm-only", "--patience", "0"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rep = json.loads(r.stdout.strip().splitlines()[-1])
@@ -477,7 +481,7 @@ def test_run_train_job_lm_transfer_cli(tmp_path):
         [sys.executable, "jobs/run_train.py", "--data", str(p), "--out",
          str(out), "--epochs", "1", "--cpus", "2", "--init-from-lm",
          str(lm_out), "--lm-loss", "0.5", "--val-cap", "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r2.returncode == 0, r2.stderr[-2000:]
     rep2 = json.loads(r2.stdout.strip().splitlines()[-1])

@@ -9,9 +9,12 @@ into; the final METS catalogues every produced group with page fptrs.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import xml.etree.ElementTree as ET
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _NS = "http://schema.primaresearch.org/PAGE/gts/pagecontent/2019-07-15"
 
@@ -41,7 +44,7 @@ def _page(lines):
 def _run(job, *argv):
     r = subprocess.run(
         [sys.executable, f"jobs/{job}", *argv, "--cpus", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=600,
+        capture_output=True, text=True, cwd=ROOT, timeout=600,
     )
     assert r.returncode == 0, (job, r.stderr[-2000:])
     return r.stdout.strip().splitlines()[-1]

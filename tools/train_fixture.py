@@ -38,16 +38,14 @@ def main() -> None:
 
     from cor_asv_ann_spark.model.seq2seq_np import Seq2SeqModel, make_vocab
     from cor_asv_ann_spark.model.train_np import train_local
-    from cor_asv_ann_spark.operators.correction import assemble_lines, spans_with_line_no
+    from cor_asv_ann_spark.operators.correction import lines_of
     from cor_asv_ann_spark.session import build_session
     from cor_asv_ann_spark.sources.spans import synth_spans
 
     spark = build_session(app="train_fixture", cpus=8, shuffle_partitions=8)
     sf = "/root/testdata/sf0.001"
-    gt = assemble_lines(spans_with_line_no(synth_spans(spark, sf, noisy=False)))
-    noisy = assemble_lines(spans_with_line_no(synth_spans(spark, sf, noisy=True)))
-    g = gt.select("doc_id", "line_no", F.concat_ws("", "texts").alias("gt"))
-    n = noisy.select("doc_id", "line_no", F.concat_ws("", "texts").alias("ocr"))
+    g = lines_of(synth_spans(spark, sf, noisy=False)).withColumnRenamed("line_text", "gt")
+    n = lines_of(synth_spans(spark, sf, noisy=True)).withColumnRenamed("line_text", "ocr")
     j = (
         g.join(n, ["doc_id", "line_no"])
         .filter((F.length("gt") <= 45) & (F.col("doc_id").cast("int") < 300))
