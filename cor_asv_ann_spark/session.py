@@ -11,6 +11,43 @@ corrector vectorizes across whatever Arrow hands it (the reference
 batches 256 lines per model call, lib/seq2seq.py:111, purely as its
 own fixed buffer size; decode results are per-line and
 batch-independent).
+
+The driver JVM starts with C2 (the optimizing JIT tier) held back until
+code is really hot: ``DRIVER_JIT_OPTIONS`` raises JDK 17's four tier-4
+thresholds tenfold. A real job runs once, in a fresh JVM, and in such a
+cold job the JIT itself was the largest CPU consumer. A per-thread
+``/proc`` split (``tools/thread_cpu.py``) of a cold 80-page PAGE-XML
+job (8-bucket resumable loop, rule corrector, 4 cores) read, in CPU s
+at JDK defaults: C2 compiler threads 30-32, py4j ``Thread-N`` 10-12,
+executor task threads (the data work) 7.5-8, Python workers 7, C1
+compiler threads 7. With the tenfold thresholds the C2 threads took
+10 s and the task threads 9.5 s, and the job's CPU fell by a quarter:
+code that runs a few thousand times stays at C1, loops that stay hot
+still reach C2. C2 is delayed rather than switched off: C1 only
+(``-XX:TieredStopAtLevel=1``) cut a cold job's CPU by 43 % but made
+the warm ``bench.py`` suite 1.7x slower (``minhash_lsh_pairs`` 3.3x);
+thresholds raised thirtyfold were no better cold than tenfold, because
+the task threads run longer at C1.
+
+Long-lived sessions (a REPL, ``bench.py``, the test suite) pay for this
+trade-off: their methods stay longer at C1 with full profiling (tier 3)
+before C2 takes them. After two warm passes of the ``bench.py`` suite
+(sf0.1, 4 cores) the JVM held 3.8-4.0 k C2-compiled methods against
+7.0-7.3 k at JDK defaults, and ``dedup_simhash``'s higher-order-function
+path (``ArrayTransform``/``ArrayFilter`` evaluation, ``NamedLambdaVariable``,
+the string-to-long cast) was still at tier 3. That query's second-pass
+run took 2.7-2.8 s against 2.0-2.1 s, with more executor task CPU; over
+ten more runs the gap shrank from about 0.7 s to 0.05-0.3 s as C2 caught
+up.
+
+The options travel as ``spark.driver.extraJavaOptions``, which reaches
+only a driver JVM that this call launches. A JVM that is already
+running keeps its own JIT settings: under ``spark-submit`` (pass the
+same string with ``--driver-java-options``), in a pyspark shell, or
+when ``getOrCreate`` returns an existing session. In local mode the
+driver JVM also runs the tasks; executor JVMs of a real cluster keep
+their defaults. A caller's ``extra={"spark.driver.extraJavaOptions":
+...}`` replaces the setting, as any ``extra`` key does.
 """
 
 from __future__ import annotations
@@ -20,6 +57,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# JDK 17 defaults: 5000, 600, 15000, 40000 (see the module docstring)
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def spread_input(df, min_parts: int | None = None):
@@ -93,6 +136,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.extraJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )

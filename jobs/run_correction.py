@@ -4,9 +4,16 @@ Cluster usage (north rule: ships via --py-files to multi-executor
 clusters at N and 4N executors):
 
     zip -r corasv.zip cor_asv_ann_spark/
-    spark-submit --py-files corasv.zip jobs/run_correction.py \
+    JIT="$(python3 -c 'from cor_asv_ann_spark.session import DRIVER_JIT_OPTIONS as o; print(o)')"
+    spark-submit --py-files corasv.zip --driver-java-options "$JIT" \
+        jobs/run_correction.py \
         --input <spans table/path> --output <dir> \
         --lineage <dir> --run-id r1 --buckets 64 [--model weights.npz]
+
+spark-submit starts the driver JVM before this script builds its
+session, so ``session.DRIVER_JIT_OPTIONS`` (delayed C2, see the
+``session`` module docstring) reaches it only through
+``--driver-java-options``.
 
 Local smoke:
 
