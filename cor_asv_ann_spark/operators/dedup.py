@@ -1,11 +1,13 @@
 """Deduplication operators for web-scale corpora.
 
 Exact (hash groupBy), MinHash+LSH (shingle → minhash → band →
-bucket-join), SimHash, n-gram Jaccard verification, and
-embedding-cosine near-dup. Everything except SimHash bit-packing is
-pure builtin-function SQL (JVM side) so the shuffle keys and band
-buckets behave identically at 100 TB; candidate generation always goes
-through bounded buckets — never a full cross join.
+bucket pairs), SimHash, n-gram Jaccard verification, and
+embedding-cosine near-dup. Everything except the SimHash bit-packing and
+the embedding projection + per-bucket cosine kernel is pure
+builtin-function SQL (JVM side) so the shuffle keys and band buckets
+behave identically at 100 TB; all three near-dup ops draw candidates
+from one banded-pair primitive (``similarity.bucket_pairs_nodup`` /
+``masked_buckets``) over bounded buckets — never a full cross join.
 """
 
 from __future__ import annotations
@@ -153,12 +155,13 @@ def lsh_candidates(
     max_bucket: int | None = None,
     observation=None,
 ) -> DataFrame:
-    """Band the signature → per-(band_idx, band_val) bucket → in-bucket
-    candidate pairs (id_a < id_b) via ``similarity.bucket_pairs``: ONE
-    aggregation over ONE banded table (the former self-join formulation
-    re-evaluated the whole upstream signature aggregation in both join
-    branches — two full signature passes per run — and needed a window
-    pass for the cap on top).
+    """Band the signature → per-(band_idx, band_val) bucket → candidate
+    pairs (id_a < id_b) via ``similarity.bucket_pairs_nodup``: ONE
+    banded table (the former self-join formulation re-evaluated the
+    whole upstream signature in both join branches), and each pair
+    leaves its first surviving band only, so no pair ``distinct``
+    follows. The band values are ``struct<string, string>`` minhash
+    slices; the first-band test compares them as they are.
 
     ``max_bucket`` is the skew/degeneracy guard: a bucket of k docs emits
     k·(k−1)/2 pairs, so one boilerplate-heavy bucket can dominate the
@@ -168,7 +171,7 @@ def lsh_candidates(
     exact-dedup's job, and this bound is what makes the band join safe
     at 10^12 docs. Drop accounting rides the same job via
     ``observation`` (no-silent-caps)."""
-    from .similarity import bucket_pairs
+    from .similarity import bucket_pairs_nodup
 
     n_bands = n_hashes // band_size
     bands = F.array(
@@ -178,9 +181,9 @@ def lsh_candidates(
         ]
     )
     banded = sig.select(F.col(id_col), F.posexplode(bands).alias("band_idx", "band_val"))
-    return bucket_pairs(
-        banded, ["band_idx", "band_val"], id_col, max_bucket, observation
-    ).distinct()
+    return bucket_pairs_nodup(
+        banded, "band_idx", "band_val", id_col, n_bands, max_bucket, observation
+    )
 
 
 def ngram_jaccard_pairs(
@@ -328,9 +331,10 @@ def simhash_near_pairs(
     observation=None,
 ) -> DataFrame:
     """Candidate pairs whose simhash differs in ≤ max_hamming bits.
-    Banding on 4 byte-chunks (pigeonhole: ≤3 differing bits ⇒ at least
-    one identical chunk) keeps the join bucketed; ``max_bucket`` bounds
-    degenerate chunks the same way as in lsh_candidates."""
+    Banding on 4 chunks of ``bits // 4`` bits (pigeonhole: ≤3 differing
+    bits ⇒ at least one identical chunk) keeps the pairs bucketed at any
+    ``bits``; ``max_bucket`` bounds degenerate chunks the same way as in
+    lsh_candidates."""
     n_chunks = 4
     chunk_bits = bits // n_chunks
     mask = (1 << chunk_bits) - 1
@@ -340,49 +344,25 @@ def simhash_near_pairs(
             for c in range(n_chunks)
         ]
     )
-    from .similarity import bucket_pairs, bucket_pairs_nodup
+    from .similarity import bucket_pairs_nodup
 
     banded = sh.select(id_col, "simhash", F.posexplode(chunks).alias("ci", "cv"))
     # bucket_pairs_nodup: ONE aggregation chain over ONE banded table —
     # the former self-join re-evaluated the simhash pandas UDF (and its
     # per-token md5 tokenization) in both join branches — AND each pair
-    # is emitted once, from its first surviving chunk, so the cross-band
-    # dedup (formerly a collect_set exchange of every near-dup pair)
-    # vanishes. The simhash value rides the bucket member struct so the
-    # hamming verify needs no join back; hamming is a pure JVM pair
-    # function applied inline in the same codegen stage.
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    if (chunk_bits + 1) * n_chunks <= 63:
-        cand = bucket_pairs_nodup(
-            banded, "ci", "cv", id_col, n_chunks, chunk_bits, max_bucket,
-            observation, payload_cols=["simhash"],
-        ).select(
-            "id_a", "id_b",
-            F.col("simhash_a").alias("sh_a"), F.col("simhash_b").alias("sh_b"),
-        )
-        return (
-            cand.withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
-        )
-    # wide-chunk fallback (bits > 56): capped pairs + collect_set dedup
-    cand = bucket_pairs(
-        banded, ["ci", "cv"], id_col, max_bucket, observation,
+    # is emitted once, from its first surviving chunk, so no cross-band
+    # dedup exchange follows. The simhash value rides the bucket member
+    # struct so the hamming verify needs no join back; hamming is a pure
+    # JVM pair function applied inline in the same codegen stage.
+    cand = bucket_pairs_nodup(
+        banded, "ci", "cv", id_col, n_chunks, max_bucket, observation,
         payload_cols=["simhash"],
-    ).select(
-        "id_a", "id_b",
-        F.col("simhash_a").alias("sh_a"), F.col("simhash_b").alias("sh_b"),
     )
-    filt = (
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return (
         cand.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-    return (
-        filt.groupBy("id_a")
-        .agg(F.collect_set(F.struct("id_b", "hamming")).alias("_s"))
-        .select("id_a", F.explode("_s").alias("x"))
-        .select("id_a", F.col("x.id_b").alias("id_b"), F.col("x.hamming").alias("hamming"))
     )
 
 
@@ -400,121 +380,50 @@ def embedding_near_dups(
 ) -> DataFrame:
     """Embedding-cosine near-dup via multi-band hyperplane LSH: k
     independent band tables (seeded Gaussian planes, vectorized numpy
-    projection), per-band (band, code) equi-self-join with a
-    ``max_bucket`` degeneracy cap, candidates OR-ed across bands, then
-    exact cosine (JVM dot) ≥ threshold. Same bounded-bucket discipline
-    as ``lsh_candidates``/``simhash_near_pairs`` — the join never
-    degenerates into all-pairs: a band bucket of k rows emits at most
-    max_bucket·(max_bucket−1)/2 pairs. Per-band scan reduction is
-    2^n_bits; recall grows with n_bands (OR over independent tables).
-    Vectors are unit-norm in the fixture; cosine = dot.
+    projection), (band, code) buckets with a ``max_bucket`` degeneracy
+    cap (``similarity.masked_buckets``), then one per-bucket Arrow
+    kernel (``similarity.bucket_verify_dots``) that emits each pair from
+    its first surviving band and keeps it when its exact cosine (numpy
+    einsum over the vectors riding in the bucket members) is ≥
+    threshold. Same bounded-bucket discipline as
+    ``lsh_candidates``/``simhash_near_pairs`` — never all-pairs: a band
+    bucket emits at most max_bucket·(max_bucket−1)/2 pairs. Per-band scan
+    reduction is 2^n_bits; recall grows with n_bands (OR over
+    independent tables). Vectors are unit-norm in the fixture; cosine =
+    dot. One plan at every scale and code width: nothing is collected or
+    broadcast, and id_a/id_b keep ``id_col``'s type.
 
     ``n_bits=None`` sizes the code width from the corpus count
-    (``auto_n_bits``) so the cap trims skew rather than every typical
-    bucket; ``observation`` surfaces rows/buckets dropped by the cap."""
+    (``auto_n_bits``, one count job) so the cap trims skew rather than
+    every typical bucket; ``observation`` surfaces rows/buckets dropped
+    by the cap."""
     from .similarity import (
         auto_n_bits,
         band_codes_udf,
-        bucket_pairs,
-        bucket_pairs_nodup,
-        dot_np,
-    )
-
-    if n_bits is None:
-        n_bits = auto_n_bits(emb.count(), max_bucket or 1000)
-    # ONE band-code UDF pass + ONE bucket aggregation (bucket_pairs) —
-    # the former window-cap + self-join ran the projection matmul UDF
-    # over the corpus twice (once per join branch) and shuffled the
-    # banded table twice on top of the cap window.
-    codes = band_codes_udf(n_bands, n_bits, seed, portable)
-    bb = emb.select(
-        F.col(id_col), F.posexplode(codes(F.col(vec_col))).alias("band", "code")
-    )
-    # exact-cosine verify. When the table fits the broadcast budget the
-    # pairs are dotted against a broadcast id->vector matrix (2 longs of
-    # Arrow traffic per pair instead of 2·dim doubles, and no verify
-    # joins at all — the einsum and hence the floats are identical);
-    # at scale indexed_dot_udf declines and the join + batched-numpy
-    # plan below runs.
-    from .similarity import indexed_dot_udf
-
-    # both verify UDFs are marked non-deterministic (guide §4.4): the
-    # cosine threshold filter otherwise gets pushed below the
-    # cross-band dedup and the optimizer re-evaluates the UDF on
-    # BOTH sides of it — measured as the whole pre-dedup candidate
-    # volume (~2.2× the unique pairs) paying the Python boundary twice.
-    # Cross-band dedup stays BEFORE the verify: unlike simhash's JVM
-    # bit_count (where filtering first is free), the cosine verify
-    # crosses the Python boundary — A/B-measured interleaved at sf0.1,
-    # dotting the raw ~4M band fan-out then deduping (4.10 s) loses to
-    # deduping first and dotting the ~1.8M unique pairs (2.25 s).
-    # The dedup itself is now the first-surviving-band emission filter
-    # inside bucket_pairs_nodup — each unique pair leaves the explode
-    # exactly once, so the former pair-grain exchange (collect_set of
-    # the ~4M fan-out, itself the A/B winner over a pair distinct:
-    # 1.17 s vs 2.01 s) is gone entirely; when the packed band-code
-    # mask would overflow a long (auto_n_bits at extreme corpus sizes),
-    # the collect_set formulation remains as the fallback.
-    from .similarity import (
-        build_dot_index,
         bucket_verify_dots,
         masked_buckets,
     )
 
-    nodup_ok = (n_bits + 1) * n_bands <= 63
-    index_b = build_dot_index(emb.sparkSession, emb, id_col, vec_col)
-    if nodup_ok and index_b is not None:
-        # fused path: pair generation AND the indexed einsum verify run
-        # per bucket inside one mapInArrow — no pair-grain rows exist
-        # anywhere in the plan (neither a JVM Generate of the ~4M
-        # candidates nor their Arrow round-trip); only near-threshold
-        # pairs with raw dots come back, and the exact rounded filter
-        # stays JVM-side so the values equal the indexed_dot_udf path
-        # bit for bit (same gather + einsum, round-half-up in the JVM).
-        masked = masked_buckets(
-            bb, "band", "code", id_col, n_bands, n_bits, max_bucket, observation
-        )
-        dots = bucket_verify_dots(
-            masked, "band", id_col, n_bands, n_bits, index_b, threshold
-        )
-        return (
-            dots.withColumn("cosine", F.round(F.col("dot"), 6))
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine")
-        )
-    if nodup_ok:
-        cand = bucket_pairs_nodup(
-            bb, "band", "code", id_col, n_bands, n_bits, max_bucket, observation
-        )
-    else:
-        cand_raw = bucket_pairs(bb, ["band", "code"], id_col, max_bucket, observation)
-        cand = (
-            cand_raw.groupBy("id_a")
-            .agg(F.collect_set("id_b").alias("_bs"))
-            .select("id_a", F.explode("_bs").alias("id_b"))
-        )
-    pair_dot = indexed_dot_udf(emb.sparkSession, emb, id_col, vec_col)
-    if pair_dot is not None:
-        pair_dot = pair_dot.asNondeterministic()
-        return (
-            cand.withColumn(
-                "cosine", F.round(pair_dot(F.col("id_a"), F.col("id_b")), 6)
-            )
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine")
-        )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    if n_bits is None:
+        n_bits = auto_n_bits(emb.count(), max_bucket or 1000)
+    # ONE band-code UDF pass over the corpus; the vector rides the
+    # bucket members, so the verify needs no join back and no index.
+    # Pairs are never rows in the plan: generation AND the dot run per
+    # bucket inside one mapInArrow, and only near-threshold pairs with
+    # raw dots come back. The exact rounded filter stays JVM-side
+    # (round-half-up in the JVM).
+    codes = band_codes_udf(n_bands, n_bits, seed, portable)
+    bb = emb.select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.posexplode(codes(F.col(vec_col))).alias("band", "code"),
+    )
+    masked = masked_buckets(
+        bb, "band", "code", id_col, n_bands, max_bucket, observation, [vec_col]
+    )
+    dots = bucket_verify_dots(masked, "band", id_col, vec_col, threshold)
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        # vectorized numpy verify: candidate volume is the product of the
-        # band fan-out, so the exact-cosine pass must be batch math, not
-        # a per-element HOF fold (measured ~30× at millions of pairs)
-        .withColumn(
-            "cosine",
-            F.round(dot_np.asNondeterministic()(F.col("v_a"), F.col("v_b")), 6),
-        )
+        dots.withColumn("cosine", F.round(F.col("dot"), 6))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

@@ -63,149 +63,60 @@ def cap_buckets(
     return out.filter(F.col("_bsz") <= max_bucket).drop("_bsz")
 
 
-def bucket_pairs(
-    banded_df: DataFrame,
-    keys: list[str],
-    id_col: str,
-    max_bucket: int | None = None,
-    observation=None,
-    payload_cols: list[str] | None = None,
-) -> DataFrame:
-    """Banded rows → candidate pairs (id_a < id_b) via ONE aggregation.
-
-    Replaces the (window-cap → self-join) formulation, which computes the
-    banded table twice (both join branches re-evaluate the band
-    UDF/signature aggregation) and shuffles it twice. Here the bucket
-    members are collected once per (keys) group, the degeneracy cap and
-    the no-silent-caps accounting both read the group size directly, and
-    in-bucket pairs are generated by a two-step lazy explode (position,
-    then tail slice) so no intermediate row ever holds more than one
-    bucket array (≤ max_bucket elements) — the k·(k−1)/2 pairs stream
-    out of the generator instead of materializing per bucket.
-    Semantics are identical: same capped buckets, same (a < b) pair set
-    (ids are unique within a bucket, the collected array is sorted, so
-    position order IS id order). ``payload_cols`` ride along as
-    struct fields (e.g. simhash values), emitted as <col>_a / <col>_b.
-    Callers still ``.distinct()`` to OR across bands.
-
-    Uncapped buckets make the collected array unbounded — callers that
-    pass ``max_bucket=None`` at corpus scale were already quadratic in
-    the self-join formulation; the cap is the 100 TB contract either
-    way."""
-    payload_cols = payload_cols or []
-    member = (
-        F.struct(F.col(id_col), *[F.col(c) for c in payload_cols])
-        if payload_cols
-        else F.col(id_col)
-    )
-    g = banded_df.groupBy(*keys).agg(F.sort_array(F.collect_list(member)).alias("_ids"))
-    sz = F.size("_ids")
-    if observation is not None:
-        g = g.observe(
-            observation,
-            F.coalesce(F.sum(sz.cast("long")), F.lit(0)).alias("rows_total"),
-            F.coalesce(
-                F.sum(F.when(sz > max_bucket, sz.cast("long")).otherwise(F.lit(0)))
-                if max_bucket is not None
-                else F.lit(0),
-                F.lit(0),
-            ).alias("rows_dropped"),
-            F.coalesce(
-                F.sum((sz > max_bucket).cast("double"))
-                if max_bucket is not None
-                else F.lit(0.0),
-                F.lit(0.0),
-            ).alias("buckets_dropped"),
-        )
-    if max_bucket is not None:
-        g = g.filter(sz <= max_bucket)
-    e1 = g.select("_ids", F.posexplode("_ids").alias("_i", "_a"))
-    e2 = e1.select(
-        "_a", F.explode(F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))).alias("_b")
-    )
-    if payload_cols:
-        return e2.select(
-            F.col(f"_a.{id_col}").alias("id_a"),
-            F.col(f"_b.{id_col}").alias("id_b"),
-            *[F.col(f"_a.{c}").alias(f"{c}_a") for c in payload_cols],
-            *[F.col(f"_b.{c}").alias(f"{c}_b") for c in payload_cols],
-        )
-    return e2.select(F.col("_a").alias("id_a"), F.col("_b").alias("id_b"))
-
-
 def bucket_pairs_nodup(
     banded_df: DataFrame,
     band_key: str,
     code_key: str,
     id_col: str,
     n_bands: int,
-    code_bits: int,
     max_bucket: int | None = None,
     observation=None,
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Cross-band DISTINCT candidate pairs with **no pair-grain
-    exchange**: each pair is emitted exactly once, from the *first
-    surviving band* in which its two ids share a bucket, so the
-    downstream ``.distinct()`` / collect_set dedup — an exchange of the
-    whole in-bucket pair fan-out (~4M rows at sf0.1 for the embedding
-    query) — disappears entirely (guide §2.4 remove shuffles outright;
-    §2.3 the pair stream is decided by a few mask bits, not moved).
+    """Cross-band DISTINCT candidate pairs ``(id_a < id_b)`` with **no
+    pair-grain exchange**: each pair is emitted exactly once, from the
+    *first surviving band* in which its two ids share a bucket, so no
+    ``.distinct()`` / collect_set dedup of the in-bucket pair fan-out
+    (~4M rows at sf0.1 for the embedding query) is needed (guide §2.4
+    remove shuffles outright).
 
-    How: every surviving (band, code) membership of an id is packed
-    into one long ``_mask`` — ``stride = code_bits + 1`` bits per band:
-    a presence bit plus the band's code — via two banded-grain
-    aggregations (per-id mask build, bucket rebuild). At the pair row,
-    ``xor = mask_a ^ mask_b`` exposes per-band code equality as zero
-    code bits; collapsing each band's code-diff bits onto its presence
-    position yields the bitmap of bands where BOTH ids sit in the same
-    *surviving* bucket, and the pair is kept iff no such band precedes
-    the current one — pure codegen bit-ops, evaluated inline in the
-    explode stage. Cap semantics are exact: masks are built from
-    post-cap buckets, so a pair whose earlier shared band was dropped
-    is still emitted from its first *surviving* one (the collect_set
-    formulation's OR-across-surviving-bands, pinned by
-    test_optimization_equivalence against forced-drop cases).
+    How: every bucket member carries ``_codes``, the id's code in every
+    band, null where that band's bucket was capped out (see
+    ``masked_buckets``). A pair in the bucket of band ``t`` is kept iff
+    no band ``j < t`` has ``_codes_a[j] = _codes_b[j]`` — an unrolled OR
+    of ``n_bands`` guarded element comparisons, evaluated inline in the
+    explode stage (no lambda, no per-pair array). It holds for codes of
+    any width or type (minhash's struct band values included). Cap
+    semantics are exact: codes are nulled post-cap, so a pair whose
+    earlier shared band was dropped is still emitted from its first
+    *surviving* one (pinned by test_optimization_equivalence against
+    forced-drop cases).
 
-    The extra aggregations shuffle the banded grain (n_bands rows/id —
-    the same volume agg1 already shuffles) instead of the pair grain
-    (Σ bucket²/2 rows), which is the smaller side by construction
-    wherever banding pays at all. The rebuilt bucket frame is
-    round-robin-spread over the cores before the pair explode: the
-    bucket rows are a few KB, so AQE would otherwise coalesce the
-    stage to ~1 partition and serialize pair generation AND the
-    downstream verify (the old pair-dedup exchange used to re-spread
-    it as a side effect).
-
-    Requires ``(code_bits + 1) * n_bands <= 63`` (mask fits a long)
-    and codes in ``[0, 2**code_bits)``; callers with wider codes keep
-    the collect_set dedup path. ``payload_cols`` are per-id constants
+    Uncapped buckets make the collected member arrays unbounded — the
+    cap is the 100 TB contract. ``payload_cols`` are per-id constants
     (e.g. the simhash value), emitted as ``<col>_a`` / ``<col>_b``."""
     from functools import reduce
 
-    stride = code_bits + 1
-    pmask = sum(1 << (stride * j) for j in range(n_bands))
-    g3 = masked_buckets(
-        banded_df, band_key, code_key, id_col, n_bands, code_bits,
-        max_bucket, observation, payload_cols,
-    )
     payload_cols = payload_cols or []
+    g3 = masked_buckets(
+        banded_df, band_key, code_key, id_col, n_bands, max_bucket,
+        observation, payload_cols,
+    )
     e1 = g3.select(F.col(band_key), "_ids", F.posexplode("_ids").alias("_i", "_a"))
     e2 = e1.select(
         band_key,
         "_a",
         F.explode(F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))).alias("_b"),
     )
-    x = F.col("_a._mask").bitwiseXOR(F.col("_b._mask"))
-    coll = reduce(Column.bitwiseOR, [F.shiftright(x, s) for s in range(1, stride)])
-    matched = (
-        F.col("_a._mask")
-        .bitwiseAND(F.col("_b._mask"))
-        .bitwiseAND(F.bitwise_not(coll))
-        .bitwiseAND(F.lit(pmask))
+    band = F.col(band_key)
+    earlier = reduce(
+        Column.__or__,
+        [
+            (band > j) & (F.col("_a._codes")[j] == F.col("_b._codes")[j])
+            for j in range(n_bands)
+        ],
     )
-    earlier = F.expr(f"shiftleft(1L, {stride} * cast({band_key} as int)) - 1L")
-    pairs = e2.filter(matched.bitwiseAND(earlier) == 0)
+    pairs = e2.filter(~F.coalesce(earlier, F.lit(False)))
     return pairs.select(
         F.col(f"_a.{id_col}").alias("id_a"),
         F.col(f"_b.{id_col}").alias("id_b"),
@@ -220,28 +131,27 @@ def masked_buckets(
     code_key: str,
     id_col: str,
     n_bands: int,
-    code_bits: int,
     max_bucket: int | None = None,
     observation=None,
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
     """The surviving-bucket frame behind ``bucket_pairs_nodup``:
-    ``(band_key, code_key, _ids: array<struct(id [, payloads], _mask)>)``
-    with per-id survived-membership masks attached and the bucket rows
-    round-robin-spread over the cores (see bucket_pairs_nodup for the
-    mask layout and why). Exposed so callers can fuse pair generation
-    with a vectorized per-bucket verify instead of exploding pair rows
-    (``embedding_near_dups``)."""
-    stride = code_bits + 1
-    if stride * n_bands > 63:
-        raise ValueError("mask would overflow a long; use bucket_pairs + dedup")
-    payload_cols = payload_cols or []
+    ``(band_key, code_key, _ids: array<struct(id, payloads..., _codes)>)``
+    sorted by id, the bucket rows round-robin-spread over the cores.
+    Bands are ``0 .. n_bands-1``; ``_codes[j]`` is the member's code in
+    band ``j``, null where that bucket was capped out.
 
-    member = (
-        F.struct(F.col(id_col), *[F.col(c) for c in payload_cols])
-        if payload_cols
-        else F.col(id_col)
-    )
+    Three banded-grain aggregations: the (band, code) buckets (cap and
+    no-silent-caps accounting read the group size), the per-id code
+    array over the surviving memberships, and the bucket rebuild with
+    members carrying it. They shuffle n_bands rows per id — never the
+    pair grain (Σ bucket²/2 rows). The round-robin spread matters
+    because the bucket rows are few: AQE would otherwise coalesce the
+    stage to ~1 partition and serialize pair generation and the verify.
+    Exposed so callers can fuse pair generation with a vectorized
+    per-bucket verify (``bucket_verify_dots``)."""
+    payload_cols = payload_cols or []
+    member = F.struct(F.col(id_col), *[F.col(c) for c in payload_cols])
     g = banded_df.groupBy(band_key, code_key).agg(F.collect_list(member).alias("_m"))
     sz = F.size("_m")
     if observation is not None:
@@ -264,48 +174,25 @@ def masked_buckets(
     if max_bucket is not None:
         g = g.filter(sz <= max_bucket)
 
-    surv = g.select(band_key, code_key, F.explode("_m").alias("_e"))
-    if payload_cols:
-        surv = surv.select(
-            band_key,
-            code_key,
-            F.col(f"_e.{id_col}").alias(id_col),
-            *[F.col(f"_e.{c}").alias(c) for c in payload_cols],
-        )
-    else:
-        surv = surv.withColumnRenamed("_e", id_col)
-    # per-id survived-membership mask: presence bit + code per band
-    # (contributions are disjoint powers — one code per (id, band))
-    contrib = F.expr(
-        f"shiftleft(1L + 2L * {code_key}, {stride} * cast({band_key} as int))"
+    surv = g.select(band_key, code_key, F.explode("_m").alias("_e")).select(
+        band_key, code_key, "_e.*"
     )
-    masks = surv.groupBy(id_col).agg(
-        F.sum(contrib).alias("_mask"),
+    # one code per (id, band): each band's max picks it, or null when
+    # that band's bucket was capped out
+    band = F.col(band_key)
+    codes = surv.groupBy(id_col).agg(
+        F.array(
+            *[F.max(F.when(band == j, F.col(code_key))) for j in range(n_bands)]
+        ).alias("_codes"),
         *[F.first(c).alias(c) for c in payload_cols],
     )
-    # rebuild the surviving buckets from the masks (band = presence
-    # bits, code = the packed code bits), members now carrying _mask
-    rb = masks.select(
-        id_col,
-        "_mask",
-        *payload_cols,
-        F.explode(
-            F.expr(
-                f"filter(sequence(0, {n_bands - 1}),"
-                f" j -> (shiftright(_mask, {stride} * j) & 1L) = 1L)"
-            )
-        ).alias(band_key),
-    ).withColumn(
-        code_key,
-        F.expr(
-            f"shiftright(_mask, {stride} * cast({band_key} as int) + 1)"
-            f" & {(1 << code_bits) - 1}L"
-        ),
-    )
+    rb = codes.select(
+        "*", F.posexplode("_codes").alias(band_key, code_key)
+    ).filter(F.col(code_key).isNotNull())
     g3 = rb.groupBy(band_key, code_key).agg(
         F.sort_array(
             F.collect_list(
-                F.struct(F.col(id_col), F.col("_mask"), *[F.col(c) for c in payload_cols])
+                F.struct(F.col(id_col), *[F.col(c) for c in payload_cols], F.col("_codes"))
             )
         ).alias("_ids")
     )
@@ -316,75 +203,69 @@ def bucket_verify_dots(
     masked: DataFrame,
     band_key: str,
     id_col: str,
-    n_bands: int,
-    code_bits: int,
-    index_broadcast,
+    vec_col: str,
     threshold: float,
 ) -> DataFrame:
-    """Fused first-match pair generation + cosine verify over the
-    ``masked_buckets`` frame: one mapInArrow turns each surviving
-    bucket's member array straight into ``(id_a, id_b, dot)`` rows for
-    the pairs that (a) have this band as their first surviving match
-    (the bucket_pairs_nodup bitmap test, vectorized in numpy) and
-    (b) clear ``threshold − 1e-6`` (a safe superset of the exact
-    rounded filter, which the caller applies in the JVM on the raw
-    dot). Dots are the SAME row-gather + ``einsum('ij,ij->i')`` over
-    the broadcast float64 matrix as ``indexed_dot_udf`` — einsum's
-    per-row summation is independent of batch composition, so the
-    doubles are bit-identical. What it removes: the 4M-row JVM pair
-    explode AND the per-pair Arrow round-trip (2 longs in / 1 double
-    out per candidate); what crosses instead is one bucket row in and
-    only the near-threshold pairs out (guide §2.3 / §4.1)."""
+    """Fused first-match pair generation + dot verify over a
+    ``masked_buckets`` frame whose members carry ``vec_col``: one
+    mapInArrow turns each surviving bucket's member array straight into
+    ``(id_a, id_b, dot)`` rows for the pairs that (a) have this band as
+    their first surviving match (``bucket_pairs_nodup``'s test, in
+    numpy) and (b) clear ``threshold − 1e-6`` (a safe superset of the
+    exact rounded filter, which the caller applies in the JVM on the
+    raw dot). Dots are a float64 row-gather + ``einsum('ij,ij->i')``;
+    ids are taken from the member array, so they keep the input's type.
+    No pair-grain rows exist in the plan and nothing is collected or
+    broadcast: one bucket row crosses in, only near-threshold pairs
+    cross out (guide §2.3 / §4.1)."""
     import pyarrow as pa
 
-    stride = code_bits + 1
-    pmask = sum(1 << (stride * j) for j in range(n_bands))
+    id_type = masked.schema["_ids"].dataType.elementType[id_col].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
+            T.StructField("dot", T.DoubleType()),
+        ]
+    )
 
     def verify(batches):
-        ids_, mat_ = index_broadcast.value
-        out_schema = pa.schema(
-            [("id_a", pa.int64()), ("id_b", pa.int64()), ("dot", pa.float64())]
-        )
         for rb in batches:
-            bands = rb.column(rb.schema.get_field_index(band_key)).to_pylist()
-            members = rb.column(rb.schema.get_field_index("_ids"))
+            bands = rb.column(band_key).to_pylist()
+            members = rb.column("_ids")
             a_out, b_out, d_out = [], [], []
             for row_i in range(rb.num_rows):
                 ms = members[row_i].values
-                mids = np.asarray(ms.field(id_col), dtype=np.int64)
-                mmask = np.asarray(ms.field("_mask"), dtype=np.int64)
-                k = len(mids)
+                k = len(ms)
                 if k < 2:
                     continue
                 ii, jj = np.triu_indices(k, 1)
-                ma, mb = mmask[ii], mmask[jj]
-                x = ma ^ mb
-                coll = np.zeros_like(x)
-                for s in range(1, stride):
-                    coll |= x >> s
-                matched = ma & mb & ~coll & pmask
-                keep = (matched & ((1 << (stride * int(bands[row_i]))) - 1)) == 0
-                ii, jj = ii[keep], jj[keep]
-                if len(ii) == 0:
-                    continue
-                ia = np.searchsorted(ids_, mids[ii])
-                ib = np.searchsorted(ids_, mids[jj])
-                d = np.einsum("ij,ij->i", mat_[ia], mat_[ib])
+                t = bands[row_i]
+                if t > 0:
+                    codes = ms.field("_codes").flatten()
+                    c = np.asarray(codes.fill_null(0)).reshape(k, -1)[:, :t]
+                    v = np.asarray(codes.is_valid()).reshape(k, -1)[:, :t]
+                    earlier = ((c[ii] == c[jj]) & v[ii] & v[jj]).any(axis=1)
+                    ii, jj = ii[~earlier], jj[~earlier]
+                vec = np.asarray(ms.field(vec_col).flatten(), dtype=np.float64)
+                vec = vec.reshape(k, -1)
+                d = np.einsum("ij,ij->i", vec[ii], vec[jj])
                 near = d >= threshold - 1e-6
-                a_out.append(mids[ii][near])
-                b_out.append(mids[jj][near])
+                ids = ms.field(id_col)
+                a_out.append(ids.take(ii[near]))
+                b_out.append(ids.take(jj[near]))
                 d_out.append(d[near])
             if a_out:
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(np.concatenate(a_out)),
-                        pa.array(np.concatenate(b_out)),
+                        pa.concat_arrays(a_out),
+                        pa.concat_arrays(b_out),
                         pa.array(np.concatenate(d_out)),
                     ],
-                    schema=out_schema,
+                    names=["id_a", "id_b", "dot"],
                 )
 
-    return masked.mapInArrow(verify, schema="id_a long, id_b long, dot double")
+    return masked.mapInArrow(verify, schema=out_schema)
 
 
 def auto_n_bits(n_rows: int, max_bucket: int) -> int:
@@ -484,79 +365,15 @@ def banded(
 def dot(a: Column, b: Column) -> Column:
     """JVM-side fold dot product: sequential-fold float semantics match
     DuckDB's list_inner_product, so oracle-checked rank queries stay
-    bit-identical. Use ``dot_np`` on high-volume pair verification —
-    the per-element HOF chain allocates per lambda call and is ~30×
-    slower than one Arrow-batched numpy einsum at millions of pairs."""
+    bit-identical. High-volume pair verification runs a batched numpy
+    einsum instead (``bucket_verify_dots``): the per-element HOF chain
+    allocates per lambda call and is ~30× slower at millions of
+    pairs."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def dot_np(a: pd.Series, b: pd.Series) -> pd.Series:
-    if len(a) == 0:
-        return pd.Series([], dtype=np.float64)
-    ma = np.stack(a.to_numpy()).astype(np.float64)
-    mb = np.stack(b.to_numpy()).astype(np.float64)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-# verify-side broadcast cutoff: rows*dim*8 bytes — comparable to the
-# planner's broadcast-join territory; above it the join-verify path runs
-BROADCAST_VERIFY_BYTES = 64 << 20
-
-
-def build_dot_index(spark, emb: DataFrame, id_col: str, vec_col: str):
-    """Broadcast (sorted ids, float64 matrix) for indexed pair dots, or
-    None when the table exceeds the broadcast budget / has non-integer
-    ids (callers keep the join-verify plan, the at-scale shape)."""
-    n = emb.count()
-    if n == 0:
-        return None
-    first = emb.select(vec_col).first()
-    dim = len(first[0])
-    if n * dim * 8 > BROADCAST_VERIFY_BYTES:
-        return None
-    rows = emb.select(id_col, vec_col).collect()
-    try:
-        ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
-    except (TypeError, ValueError):
-        return None  # non-integer ids: keep the join path
-    order = np.argsort(ids)
-    ids = ids[order]
-    mat = np.array([rows[i][1] for i in order], dtype=np.float64)
-    return spark.sparkContext.broadcast((ids, mat))
-
-
-def indexed_dot_udf(spark, emb: DataFrame, id_col: str, vec_col: str):
-    """Pair verification against a BROADCAST id->vector matrix, or None
-    when the table is too big to broadcast.
-
-    When the embedding table fits the broadcast budget (it is already
-    being shipped to every executor as one or two broadcast-hash-join
-    relations on the verify joins), the per-pair Arrow traffic drops
-    from 2·dim doubles to 2 longs: the UDF receives only (id_a, id_b)
-    and dots rows of the broadcast float64 matrix via searchsorted
-    lookups + the SAME einsum ``dot_np`` runs — bit-identical doubles,
-    ~dim× less serialization on millions of candidate pairs. Returns
-    None above the budget (or on non-numeric ids) — callers fall back
-    to the join + ``dot_np`` plan, which is the at-scale shape."""
-    b = build_dot_index(spark, emb, id_col, vec_col)
-    if b is None:
-        return None
-
-    @F.pandas_udf(T.DoubleType())
-    def pair_dot(a: pd.Series, bcol: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype=np.float64)
-        ids_, mat_ = b.value
-        ia = np.searchsorted(ids_, a.to_numpy(dtype=np.int64))
-        ib = np.searchsorted(ids_, bcol.to_numpy(dtype=np.int64))
-        return pd.Series(np.einsum("ij,ij->i", mat_[ia], mat_[ib]))
-
-    return pair_dot
 
 
 def kmeans_centroids(

@@ -9,9 +9,11 @@ replaced (or as an independent brute-force reference):
 * ``asword_col`` (JVM replace-chain + regexp) == the pandas
   ``asword_normalizer`` over a stress alphabet, with and without a
   cascading charmap;
-* ``bucket_pairs`` (groupBy + lazy in-bucket explode) == the former
-  window-cap + self-join pair set, including the cap and the
-  no-silent-caps Observation metrics;
+* ``bucket_pairs_nodup`` (first-surviving-band emission) and the fused
+  embedding verify == the former window-cap + self-join + distinct pair
+  set (cosines: a numpy einsum over collected vectors), at every code
+  width and type, including the cap and the no-silent-caps Observation
+  metrics;
 * ``adjusted_distance``'s equal-after-normalization fast path == the
   full difflib path (alignment length after grapheme recombination);
 * ``char_ngram_counts``'s derived unigram rows == brute-force counts.
@@ -67,9 +69,13 @@ def test_asword_col_matches_pandas_normalizer(spark, charmap):
         assert r.jvm == r.py, f"{r.word!r}: jvm={r.jvm!r} py={r.py!r}"
 
 
-def _old_self_join_pairs(banded, keys, id_col, max_bucket, observation=None):
-    """The pre-round-6 formulation (window cap + self-join), kept here
-    as the reference semantics for bucket_pairs."""
+def _old_self_join_pairs(
+    banded, keys, id_col, max_bucket, observation=None, payload_cols=()
+):
+    """The pre-round-6 formulation (window cap + self-join + cross-band
+    distinct), kept here as the reference semantics for
+    ``bucket_pairs_nodup``: every capped in-bucket pair (a < b) once,
+    with ``payload_cols`` emitted as <col>_a / <col>_b."""
     from cor_asv_ann_spark.operators.similarity import cap_buckets
 
     banded_b = banded
@@ -82,14 +88,42 @@ def _old_self_join_pairs(banded, keys, id_col, max_bucket, observation=None):
         cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
     return (
         a.join(b, cond)
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in payload_cols],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in payload_cols],
+        )
         .distinct()
     )
 
 
+def _assert_same_observation(obs_new, obs_ref, max_bucket, n_rows):
+    """Drop metrics equal the reference's; uncapped, the reference does
+    not observe, and nothing may be dropped."""
+    mn = obs_new.get
+    assert mn["rows_total"] == n_rows
+    if max_bucket is None:
+        assert mn["rows_dropped"] == 0 and mn["buckets_dropped"] == 0.0
+        return
+    mo = obs_ref.get
+    assert mn["rows_total"] == mo["rows_total"]
+    assert mn["rows_dropped"] == (mo["rows_dropped"] or 0)
+    assert round(mn["buckets_dropped"]) == round(mo["buckets_dropped"] or 0.0)
+
+
+def _once(rows, *fields):
+    """The rows as a set of field tuples, asserting none repeats."""
+    got = [tuple(getattr(r, f) for f in fields) for r in rows]
+    assert len(got) == len(set(got)), "pair emitted twice"
+    return set(got)
+
+
 @pytest.mark.parametrize("max_bucket", [None, 4])
 def test_bucket_pairs_matches_self_join(spark, max_bucket):
-    from cor_asv_ann_spark.operators.similarity import bucket_pairs
+    """First-surviving-band emission == self-join + cross-band distinct:
+    same pair set, each pair exactly once, same cap Observation."""
+    from cor_asv_ann_spark.operators.similarity import bucket_pairs_nodup
 
     rng = random.Random(3)
     rows = [
@@ -99,18 +133,13 @@ def test_bucket_pairs_matches_self_join(spark, max_bucket):
     ]
     banded = spark.createDataFrame(rows)
     obs_new, obs_old = Observation(), Observation()
-    new = bucket_pairs(
-        banded, ["band", "code"], "doc_id", max_bucket, obs_new
-    ).distinct()
+    new = bucket_pairs_nodup(
+        banded, "band", "code", "doc_id", 3, max_bucket, obs_new
+    ).collect()
     old = _old_self_join_pairs(banded, ["band", "code"], "doc_id", max_bucket, obs_old)
-    new_set = {(r.id_a, r.id_b) for r in new.collect()}
-    old_set = {(r.id_a, r.id_b) for r in old.collect()}
-    assert new_set == old_set and len(new_set) > 0
-    if max_bucket is not None:  # the old form only observes when capped
-        mn, mo = obs_new.get, obs_old.get
-        assert mn["rows_total"] == mo["rows_total"]
-        assert mn["rows_dropped"] == (mo["rows_dropped"] or 0)
-        assert round(mn["buckets_dropped"]) == round(mo["buckets_dropped"] or 0.0)
+    new_set = _once(new, "id_a", "id_b")
+    assert new_set == {(r.id_a, r.id_b) for r in old.collect()} and new_set
+    _assert_same_observation(obs_new, obs_old, max_bucket, len(rows))
 
 
 def test_with_shingles_jvm_matches_python_slicing(spark):
@@ -148,40 +177,38 @@ def test_with_shingles_jvm_matches_python_slicing(spark):
 
 @pytest.mark.parametrize("max_bucket", [None, 4])
 def test_bucket_pairs_nodup_matches_dedup(spark, max_bucket):
-    """First-surviving-band emission == generate-then-dedup: same pair
-    set, each pair exactly once, same cap observation metrics."""
-    from cor_asv_ann_spark.operators.similarity import (
-        bucket_pairs,
-        bucket_pairs_nodup,
-    )
+    """The first-band test works at any code width and type: full-range
+    64-bit codes (the former packed mask held ≤ 63 bits in all), strings
+    and minhash-style structs, each against the self-join reference."""
+    from cor_asv_ann_spark.operators.similarity import bucket_pairs_nodup
 
     rng = random.Random(7)
-    rows = [
-        Row(doc_id=i, band=b, code=rng.randint(0, 5))
-        for i in range(40)
-        for b in range(3)
-    ]
-    banded = spark.createDataFrame(rows)
-    obs_new, obs_old = Observation(), Observation()
-    new = bucket_pairs_nodup(
-        banded, "band", "code", "doc_id", 3, 3, max_bucket, obs_new
-    ).collect()
-    old = bucket_pairs(
-        banded, ["band", "code"], "doc_id", max_bucket, obs_old
-    ).distinct().collect()
-    new_pairs = [(r.id_a, r.id_b) for r in new]
-    assert len(new_pairs) == len(set(new_pairs)), "pair emitted twice"
-    assert set(new_pairs) == {(r.id_a, r.id_b) for r in old}
-    assert len(new_pairs) > 0
-    mn, mo = obs_new.get, obs_old.get
-    assert mn["rows_total"] == mo["rows_total"]
-    assert mn["rows_dropped"] == mo["rows_dropped"]
-    assert round(mn["buckets_dropped"]) == round(mo["buckets_dropped"])
+    wide = [rng.randint(-(2**63), 2**63 - 1) for _ in range(6)]
+    kinds = {
+        "long": lambda c: wide[c],
+        "string": lambda c: f"code-{c}",
+        "struct": lambda c: Row(k0=f"h{c}", k1=f"h{c % 2}"),
+    }
+    draws = [(i, b, rng.randint(0, 5)) for i in range(40) for b in range(3)]
+    for kind, code in kinds.items():
+        banded = spark.createDataFrame(
+            [Row(doc_id=i, band=b, code=code(c)) for i, b, c in draws]
+        )
+        obs_new, obs_old = Observation(), Observation()
+        new = bucket_pairs_nodup(
+            banded, "band", "code", "doc_id", 3, max_bucket, obs_new
+        ).collect()
+        old = _old_self_join_pairs(
+            banded, ["band", "code"], "doc_id", max_bucket, obs_old
+        ).collect()
+        new_set = _once(new, "id_a", "id_b")
+        assert new_set == {(r.id_a, r.id_b) for r in old} and new_set, kind
+        _assert_same_observation(obs_new, obs_old, max_bucket, len(draws))
 
 
 def test_bucket_pairs_nodup_dropped_first_band_rescue(spark):
     """A pair whose FIRST matching band is over-capped must still be
-    emitted from its first SURVIVING matching band (the masks are built
+    emitted from its first SURVIVING matching band (codes are nulled
     post-cap, so survival — not raw code equality — drives emission)."""
     from cor_asv_ann_spark.operators.similarity import bucket_pairs_nodup
 
@@ -189,95 +216,215 @@ def test_bucket_pairs_nodup_dropped_first_band_rescue(spark):
     rows += [Row(doc_id=0, band=1, code=7), Row(doc_id=1, band=1, code=7)]
     rows += [Row(doc_id=i, band=1, code=i - 2) for i in range(2, 8)]  # singletons
     banded = spark.createDataFrame(rows)
-    out = bucket_pairs_nodup(banded, "band", "code", "doc_id", 2, 3, 4, None)
+    out = bucket_pairs_nodup(banded, "band", "code", "doc_id", 2, 4, None)
     assert {(r.id_a, r.id_b) for r in out.collect()} == {(0, 1)}
 
 
-def test_bucket_pairs_nodup_payloads_and_simhash_query(spark):
-    """Payload columns ride correctly, and the simhash query's
-    first-match formulation reproduces the dedup formulation's rows
-    (including hamming values) on a corpus with real near-dups."""
-    from cor_asv_ann_spark.operators.dedup import simhash, simhash_near_pairs
-    from cor_asv_ann_spark.operators.similarity import bucket_pairs
-
-    rng = random.Random(11)
-    docs = []
+def _simhash_docs(spark, n=60, seed=11):
+    rng = random.Random(seed)
     base_words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    for i in range(60):
+    docs = []
+    for i in range(n):
         words = [base_words[rng.randint(0, 2)] for _ in range(12)]
         if rng.random() < 0.5:
             words[rng.randint(0, 11)] = base_words[rng.randint(3, 5)]
         docs.append(Row(doc_id=i, text=" ".join(words)))
-    sh = simhash(spark.createDataFrame(docs))
-    new = simhash_near_pairs(sh, max_hamming=6, max_bucket=8)
-    rows_new = new.collect()
-    # reference: capped in-bucket pairs -> hamming -> cross-band distinct
+    return spark.createDataFrame(docs)
+
+
+def _simhash_reference(sh, bits, max_hamming, max_bucket, observation):
+    """Capped in-bucket pairs over the 4 simhash chunks → hamming →
+    cross-band distinct."""
+    cb = bits // 4
     chunks = F.array(*[
-        F.shiftright(F.col("simhash"), c * 8).bitwiseAND(F.lit(255))
+        F.shiftright(F.col("simhash"), c * cb).bitwiseAND(F.lit((1 << cb) - 1))
         for c in range(4)
     ])
     banded = sh.select("doc_id", "simhash", F.posexplode(chunks).alias("ci", "cv"))
-    ref = (
-        bucket_pairs(banded, ["ci", "cv"], "doc_id", 8, None, payload_cols=["simhash"])
+    return (
+        _old_self_join_pairs(
+            banded, ["ci", "cv"], "doc_id", max_bucket, observation, ["simhash"]
+        )
         .withColumn(
             "hamming",
             F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
-        .filter(F.col("hamming") <= 6)
+        .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-        .distinct()
     )
-    new_set = {(r.id_a, r.id_b, r.hamming) for r in rows_new}
-    assert len(rows_new) == len(new_set), "pair emitted twice"
-    assert new_set == {(r.id_a, r.id_b, r.hamming) for r in ref.collect()}
+
+
+def test_bucket_pairs_nodup_payloads_and_simhash_query(spark):
+    """Payload columns ride correctly, and the simhash query's
+    first-match formulation reproduces the reference formulation's rows
+    (including hamming values) on a corpus with real near-dups."""
+    from cor_asv_ann_spark.operators.dedup import simhash, simhash_near_pairs
+
+    sh = simhash(_simhash_docs(spark))
+    rows_new = simhash_near_pairs(sh, max_hamming=6, max_bucket=8).collect()
+    ref = _simhash_reference(sh, 32, 6, 8, None).collect()
+    new_set = _once(rows_new, "id_a", "id_b", "hamming")
+    assert new_set == {(r.id_a, r.id_b, r.hamming) for r in ref}
     assert len(new_set) > 0
+
+
+@pytest.mark.parametrize("max_bucket", [None, 12])
+def test_simhash_64_bit_chunks(spark, max_bucket):
+    """simhash(bits=64) bands on 16-bit chunks (68 bits of codes plus
+    presence, past the former packed mask): one pass, each pair once,
+    equal to the reference, drop metrics included."""
+    from cor_asv_ann_spark.operators.dedup import simhash, simhash_near_pairs
+
+    sh = simhash(_simhash_docs(spark, n=80, seed=5), bits=64)
+    obs_new, obs_ref = Observation(), Observation()
+    new = simhash_near_pairs(
+        sh, max_hamming=12, bits=64, max_bucket=max_bucket, observation=obs_new
+    ).collect()
+    ref = _simhash_reference(sh, 64, 12, max_bucket, obs_ref).collect()
+    new_set = _once(new, "id_a", "id_b", "hamming")
+    assert new_set == {(r.id_a, r.id_b, r.hamming) for r in ref} and new_set
+    _assert_same_observation(obs_new, obs_ref, max_bucket, 4 * 80)
+    if max_bucket is not None:
+        assert obs_new.get["rows_dropped"] > 0
+
+
+@pytest.mark.parametrize("max_bucket", [None, 3])
+def test_minhash_struct_codes(spark, max_bucket):
+    """lsh_candidates bands on struct<string, string> minhash slices and
+    emits each candidate once, with no pair distinct, equal to the
+    self-join reference, drop metrics included."""
+    from cor_asv_ann_spark.operators.dedup import (
+        lsh_candidates,
+        minhash_signature,
+        with_shingles,
+    )
+
+    sig = minhash_signature(with_shingles(_simhash_docs(spark, n=50, seed=2)), "doc_id")
+    obs_new, obs_ref = Observation(), Observation()
+    new = lsh_candidates(sig, "doc_id", 8, 2, max_bucket, obs_new).collect()
+    bands = F.array(*[
+        F.struct(F.col(f"mh{2 * b}").alias("k0"), F.col(f"mh{2 * b + 1}").alias("k1"))
+        for b in range(4)
+    ])
+    banded = sig.select("doc_id", F.posexplode(bands).alias("band_idx", "band_val"))
+    ref = _old_self_join_pairs(
+        banded, ["band_idx", "band_val"], "doc_id", max_bucket, obs_ref
+    ).collect()
+    new_set = _once(new, "id_a", "id_b")
+    assert new_set == {(r.id_a, r.id_b) for r in ref} and new_set
+    _assert_same_observation(obs_new, obs_ref, max_bucket, 4 * 50)
+    if max_bucket is not None:
+        assert obs_new.get["rows_dropped"] > 0
+
+
+def _clustered_emb(spark, noise=0.35, id_type="long"):
+    """80 unit vectors in 8 dims around 5 centers."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    centers = rng.standard_normal((5, 8))
+    vecs = centers[np.arange(80) % 5] + noise * rng.standard_normal((80, 8))
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        f"vec_id {id_type}, embedding array<double>",
+    )
+
+
+def _cosine_reference(emb, n_bands, n_bits, threshold, max_bucket, observation):
+    """Self-join candidates over the portable band codes, then a
+    numpy einsum over the collected vectors and Spark's HALF_UP rounding."""
+    import numpy as np
+
+    from cor_asv_ann_spark.operators.similarity import band_codes_udf
+
+    codes = band_codes_udf(n_bands, n_bits, 42, True)
+    bb = emb.select(
+        F.col("vec_id"), F.posexplode(codes(F.col("embedding"))).alias("band", "code")
+    )
+    cand = _old_self_join_pairs(bb, ["band", "code"], "vec_id", max_bucket, observation)
+    pairs = [(r.id_a, r.id_b) for r in cand.collect()]
+    vec = {r.vec_id: r.embedding for r in emb.collect()}
+    if not pairs:
+        return set()
+    mat = lambda ids: np.array([vec[i] for i in ids], dtype=np.float64)  # noqa: E731
+    dots = np.einsum("ij,ij->i", mat([a for a, _ in pairs]), mat([b for _, b in pairs]))
+    out = {(a, b, _round_half_up6(float(d))) for (a, b), d in zip(pairs, dots)}
+    return {r for r in out if r[2] >= threshold}
 
 
 @pytest.mark.parametrize("max_bucket", [None, 25])
 def test_bucket_verify_dots_matches_pair_path(spark, max_bucket):
     """The fused per-bucket verify (masked_buckets + bucket_verify_dots
-    + JVM round/filter) returns exactly the rows of the pair-explode +
-    indexed-dot path, caps included."""
-    import numpy as np
-
+    + JVM round/filter) returns exactly the rows of the self-join
+    candidates dotted in numpy, caps included."""
     from cor_asv_ann_spark.operators.dedup import embedding_near_dups
-    from cor_asv_ann_spark.operators.similarity import (
-        band_codes_udf,
-        bucket_pairs_nodup,
-        build_dot_index,
-    )
 
-    rng = np.random.default_rng(5)
-    vecs = rng.standard_normal((80, 8))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(80)],
-        "vec_id long, embedding array<double>",
-    )
-    # fused path (build_dot_index always fits here)
+    emb = _clustered_emb(spark, noise=3.0)
+    obs_new, obs_ref = Observation(), Observation()
     fused = embedding_near_dups(
         emb, threshold=0.1, n_bands=4, n_bits=2, max_bucket=max_bucket,
-        portable=True,
+        observation=obs_new, portable=True,
     ).collect()
-    # reference: explicit pair stream + indexed dot + JVM round/filter
-    codes = band_codes_udf(4, 2, 42, True)
-    bb = emb.select(
-        F.col("vec_id"), F.posexplode(codes(F.col("embedding"))).alias("band", "code")
+    ref = _cosine_reference(emb, 4, 2, 0.1, max_bucket, obs_ref)
+    got = _once(fused, "id_a", "id_b", "cosine")
+    assert got == ref and len(got) > 0
+    _assert_same_observation(obs_new, obs_ref, max_bucket, 4 * 80)
+
+
+@pytest.mark.parametrize("max_bucket", [None, 6])
+def test_embedding_near_dups_at_its_defaults(spark, max_bucket):
+    """n_bands=8 × n_bits=8 (72 code bits, past the former packed mask)
+    takes the same fused path: each pair once, equal to the reference,
+    drop metrics included."""
+    from cor_asv_ann_spark.operators.dedup import embedding_near_dups
+
+    emb = _clustered_emb(spark)
+    obs_new, obs_ref = Observation(), Observation()
+    got = _once(
+        embedding_near_dups(
+            emb, threshold=0.5, max_bucket=max_bucket, observation=obs_new,
+            portable=True,
+        ).collect(),
+        "id_a", "id_b", "cosine",
     )
-    cand = bucket_pairs_nodup(bb, "band", "code", "vec_id", 4, 2, max_bucket)
-    idx = build_dot_index(spark, emb, "vec_id", "embedding")
-    ids_, mat_ = idx.value
-    ref = []
-    for r in cand.collect():
-        ia, ib = np.searchsorted(ids_, r.id_a), np.searchsorted(ids_, r.id_b)
-        d = float(np.einsum("ij,ij->i", mat_[ia : ia + 1], mat_[ib : ib + 1])[0])
-        ref.append((r.id_a, r.id_b, d))
-    ref_rows = {
-        (a, b, _round_half_up6(d)) for a, b, d in ref if _round_half_up6(d) >= 0.1
-    }
-    got = {(r.id_a, r.id_b, r.cosine) for r in fused}
-    assert len(fused) == len(got)
-    assert got == ref_rows and len(got) > 0
+    assert got == _cosine_reference(emb, 8, 8, 0.5, max_bucket, obs_ref) and got
+    _assert_same_observation(obs_new, obs_ref, max_bucket, 8 * 80)
+    if max_bucket is not None:
+        assert obs_new.get["rows_dropped"] > 0
+
+
+def test_embedding_near_dups_keeps_int_ids(spark):
+    """id_a/id_b come back in the id column's own type, at a narrow
+    code width and at the defaults."""
+    from cor_asv_ann_spark.operators.dedup import embedding_near_dups
+
+    emb = _clustered_emb(spark, id_type="int")
+    for widths in ({"n_bands": 4, "n_bits": 2}, {}):
+        out = embedding_near_dups(emb, threshold=0.5, **widths)
+        assert out.schema["id_a"].dataType.simpleString() == "int", widths
+        assert out.schema["id_b"].dataType.simpleString() == "int", widths
+        rows = out.collect()
+        assert rows and all(r.id_a < r.id_b for r in rows)
+
+
+def test_embedding_near_dups_builds_without_jobs(spark):
+    """Building the DataFrame runs no Spark job: nothing is counted,
+    collected or broadcast before an action."""
+    from cor_asv_ann_spark.operators.dedup import embedding_near_dups
+
+    sc = spark.sparkContext
+    emb = _clustered_emb(spark)
+    group = "embedding-near-dups-build"
+    sc.setJobGroup(group, "build only")
+    try:
+        out = embedding_near_dups(emb, threshold=0.5)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        out.collect()  # the tracker does see the group's jobs
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def _round_half_up6(x: float) -> float:
@@ -292,14 +439,14 @@ def _round_half_up6(x: float) -> float:
 
 
 def test_bucket_pairs_payload_cols(spark):
-    from cor_asv_ann_spark.operators.similarity import bucket_pairs
+    from cor_asv_ann_spark.operators.similarity import bucket_pairs_nodup
 
     rows = [
         Row(doc_id=i, payload=i * 10, ci=0, cv=i % 2) for i in range(6)
     ]
     banded = spark.createDataFrame(rows)
-    out = bucket_pairs(
-        banded, ["ci", "cv"], "doc_id", None, None, payload_cols=["payload"]
+    out = bucket_pairs_nodup(
+        banded, "ci", "cv", "doc_id", 1, None, None, payload_cols=["payload"]
     ).collect()
     for r in out:
         assert r.id_a < r.id_b

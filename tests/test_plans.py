@@ -2,6 +2,7 @@
 engine is designed around (shuffle budget, broadcast joins, single
 source scan, predicate pushdown)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from cor_asv_ann_spark.operators.correction import correct_pipeline
@@ -319,3 +320,68 @@ def test_resumable_bucket_plan_is_the_flagship_plan(spark, sf_small, tmp_path, m
     for plan in plans:
         assert not line_agg.search(plan), plan
         assert n_exchanges(plan) == n_exchanges(flagship) == 2, plan
+
+
+PYTHON_NODES = {"MapInArrow", "MapInPandas", "ArrowEvalPython"}
+
+
+def _barrier_tail(df) -> set[str]:
+    """Node names between ``_ordered``'s round-robin barrier (the child
+    of the orderBy's range exchange) and the next exchange below it."""
+    def kids(node):
+        c = node.children()
+        return [c.apply(i) for i in range(c.size())]
+
+    def is_exchange(node, partitioning):
+        return node.nodeName() == "Exchange" and node.outputPartitioning().toString().startswith(
+            partitioning
+        )
+
+    node = df._jdf.queryExecution().executedPlan().initialPlan()
+    while not is_exchange(node, "rangepartitioning"):
+        (node,) = kids(node)
+    (barrier,) = kids(node)
+    assert is_exchange(barrier, "RoundRobinPartitioning")
+    names, todo = set(), kids(barrier)
+    while todo:
+        node = todo.pop()
+        if node.nodeName() != "Exchange":
+            names.add(node.nodeName())
+            todo.extend(kids(node))
+    return names
+
+
+@pytest.mark.parametrize(
+    "query", ["layout_reading_order", "pagexml_lines", "embedding_near_dups"]
+)
+def test_ordered_barrier_tail_is_python(spark, sf_small, query):
+    """``_ordered`` pays a result-row exchange to stop the orderBy's
+    range sampling from re-running the segment below it; that only pays
+    off when the segment is a Python stage. Each barrier query's tail
+    must stay one (the embedding one is the fused verify MapInArrow)."""
+    import __spark_entry__ as e
+
+    tail = _barrier_tail(e.queries()[query](spark, sf_small))
+    assert tail & PYTHON_NODES, tail
+    if query == "embedding_near_dups":
+        assert "MapInArrow" in tail
+    # the detector tells a JVM-only tail apart
+    assert not _barrier_tail(e._ordered(spark.range(10), "id")) & PYTHON_NODES
+
+
+def test_pair_filter_has_no_lambda(spark, sf_small):
+    """The first-surviving-band pair test is an unrolled OR of element
+    comparisons: no higher-order function, no array built per pair."""
+    import __spark_entry__ as e
+
+    plan = e.queries()["dedup_simhash"](spark, sf_small)._jdf.queryExecution().executedPlan()
+    conds, todo = [], [plan.initialPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Filter" and "_b.`_codes`" in node.condition().sql():
+            conds.append(node.condition().sql())
+        c = node.children()
+        todo.extend(c.apply(i) for i in range(c.size()))
+    assert len(conds) == 1, conds
+    for banned in ("lambda", "zip_with", "exists", "array_position"):
+        assert banned not in conds[0].lower(), conds[0]
