@@ -998,7 +998,7 @@ def q_dedup_simhash(spark, sf_dir):
 
     d = _docs(spark, sf_dir)
     pairs = simhash_near_pairs(
-        simhash(d, "text", "doc_id", portable=True), "doc_id", max_hamming=6
+        simhash(d, "text", "doc_id"), "doc_id", max_hamming=6
     )
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")

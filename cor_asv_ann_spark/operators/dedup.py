@@ -265,7 +265,6 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 32,
-    portable: bool = True,
 ) -> DataFrame:
     """SimHash: per-token 32-bit hash votes → sign per bit → packed int.
 
@@ -275,25 +274,18 @@ def simhash(
     previous all-JVM nested-HOF vote built a fresh 32-element array per
     token per doc — measured ~2× slower and allocation-bound.)
 
-    ``portable=True`` (default) derives the 32-bit token hash from md5 —
-    the same trick as ``minhash_signature`` — so any ANSI engine (the
-    DuckDB oracle) reproduces the exact simhash values. ``portable=False``
-    uses xxhash64 (cheaper at 100 TB, engine-specific)."""
+    The 32-bit token hash derives from md5 — the same trick as
+    ``minhash_signature`` — so any ANSI engine (the DuckDB oracle)
+    reproduces the exact simhash values."""
     from ..session import spread_input
 
     df = spread_input(df)  # votes are per-doc integer sums: spreading a
     # single-split input parallelizes the (dominant) per-token md5 +
     # numpy vote stage without touching any result
-    if portable:
-        token_hashes = F.expr(
-            f"transform(filter(split(lower(regexp_replace({text_col}, '\\\\s+', ' ')), ' '),"
-            f" x -> x != ''), t -> cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint))"
-        )
-    else:
-        token_hashes = F.expr(
-            f"transform(filter(split(lower(regexp_replace({text_col}, '\\\\s+', ' ')), ' '),"
-            f" x -> x != ''), t -> xxhash64(t))"
-        )
+    token_hashes = F.expr(
+        f"transform(filter(split(lower(regexp_replace({text_col}, '\\\\s+', ' ')), ' '),"
+        f" x -> x != ''), t -> cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint))"
+    )
 
     @F.pandas_udf(T.LongType())
     def pack_votes(hs: pd.Series) -> pd.Series:

@@ -7,8 +7,10 @@ path: **multi-band hyperplane LSH** — k independent band tables, each
 banding on the sign bits of projections against seeded Gaussian
 hyperplanes; candidates are the OR over bands, verified with exact
 cosine. Candidate generation always goes through bounded (band, code)
-buckets — never a cross join — and degenerate buckets are capped the
-same way as minhash's ``lsh_candidates``.
+buckets — never a cross join. The three near-dup ops in ``dedup`` cap
+buckets by their collected size (``masked_buckets``); the query-side
+searches (``lsh_topk``'s buckets, ``ivf_topk``'s cells) cap by a window
+count (``cap_buckets``), which spills instead of collecting vectors.
 
 The projection itself is a vectorized Arrow-batched numpy matmul
 (one ``(batch, dims) @ (dims, n_planes)`` per batch): at 768-dim real
@@ -33,9 +35,13 @@ def cap_buckets(
     max_bucket: int,
     observation=None,
 ) -> DataFrame:
-    """Shared bucket-degeneracy guard for every banded join
-    (minhash/simhash/hyperplane LSH): window-count the bucket size over
-    ``keys`` and drop rows in buckets larger than ``max_bucket``.
+    """Shared bucket-degeneracy guard for the query-side searches: window-
+    count the group size over ``keys`` and drop rows in groups larger
+    than ``max_bucket``. Its callers are ``lsh_topk`` ((band, code)
+    buckets) and ``ivf_topk`` (an IVF cell holds about n/n_cells
+    vectors). Both carry the vectors on the rows, and the window count
+    spills to disk, where a collected member array of a degenerate
+    bucket (``masked_buckets``) has to fit in one task's memory.
 
     NO SILENT CAPS: pass a ``pyspark.sql.Observation`` and the drop
     accounting (rows_total, rows_dropped, buckets_dropped) rides the same
@@ -333,35 +339,6 @@ def band_codes_udf(n_bands: int, n_bits: int, seed: int = 42, portable: bool = F
     return codes
 
 
-def banded(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_bands: int,
-    n_bits: int,
-    seed: int = 42,
-    max_bucket: int | None = None,
-    observation=None,
-    portable: bool = False,
-) -> DataFrame:
-    """(id, band, code) rows — one per band table. ``max_bucket`` drops
-    degenerate (band, code) buckets: a bucket of k rows would emit
-    k·(k−1)/2 self-join pairs, so an uncapped hot bucket is an all-pairs
-    join in disguise at 10^9+ vectors. ``observation`` surfaces the drop
-    accounting (see ``cap_buckets``)."""
-    codes = band_codes_udf(n_bands, n_bits, seed, portable)
-    out = df.select(
-        F.col(id_col), F.posexplode(codes(F.col(vec_col))).alias("band", "code")
-    )
-    if max_bucket is not None:
-        # bucket-size cap via a window count: ONE pass over the UDF
-        # output (a sizes-subquery join would recompute the projection
-        # matmul), and the (band, code) exchange it introduces is the
-        # same partitioning the downstream self-join needs
-        out = cap_buckets(out, ["band", "code"], max_bucket, observation)
-    return out
-
-
 def dot(a: Column, b: Column) -> Column:
     """JVM-side fold dot product: sequential-fold float semantics match
     DuckDB's list_inner_product, so oracle-checked rank queries stay
@@ -435,6 +412,17 @@ def _cell_udf(centroids_b, top: int = 1):
     return cells
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, neighbor_id, rank, cosine)``: each query's ``k`` best
+    ``scored`` rows, ties broken by the lower neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -480,12 +468,7 @@ def ivf_topk(
         # cell, so a (query, neighbor) pair arrives at most once — and
         # skipping it saves a whole exchange
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 def brute_force_topk(
@@ -507,12 +490,7 @@ def brute_force_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", F.round(dot(F.col("qvec"), F.col("cvec")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, k)
 
 
 def lsh_topk(
@@ -530,37 +508,40 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: multi-band hyperplane LSH. Each of the
     ``n_bands`` independent band tables buckets both sides on an
-    ``n_bits``-bit sign code; candidates are the OR (distinct union)
-    over bands, then verified with exact cosine and ranked. Per-band
-    scan reduction is 2^n_bits; recall grows as
-    1−(1−p^n_bits)^n_bands with p the per-plane agreement probability.
+    ``n_bits``-bit sign code: the corpus rows ``(id, vec, band, code)``
+    through ``cap_buckets``, joined by the broadcast query band rows.
+    Candidates are the OR (distinct union) over bands, verified with
+    exact cosine and ranked. Per-band scan reduction is 2^n_bits;
+    recall grows as 1−(1−p^n_bits)^n_bands with p the per-plane
+    agreement probability.
 
     ``n_bits=None`` derives the code width from the corpus size
     (``auto_n_bits`` — one count() job) so the cap trims skew rather
     than every typical bucket; ``observation`` reports capped drops."""
     if n_bits is None:
         n_bits = auto_n_bits(corpus.count(), max_bucket or 1000)
-    cb = banded(corpus, id_col, vec_col, n_bands, n_bits, seed, max_bucket,
-                observation, portable)
-    qb = banded(
-        queries, id_col, vec_col, n_bands, n_bits, seed, portable=portable
-    ).withColumnRenamed(id_col, "query_id")
-    cand = (
+    codes = band_codes_udf(n_bands, n_bits, seed, portable)
+    cb = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
+        F.posexplode(codes(F.col(vec_col))).alias("band", "code"),
+    )
+    if max_bucket is not None:
+        # a window count: one pass over the UDF output (a sizes-subquery
+        # join would recompute the projection matmul), and it spills
+        # where a collected bucket of vectors would have to fit a task
+        cb = cap_buckets(cb, ["band", "code"], max_bucket, observation)
+    qb = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
+        F.posexplode(codes(F.col(vec_col))).alias("band", "code"),
+    )
+    scored = (
         cb.join(F.broadcast(qb), ["band", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(F.col("query_id"), F.col(id_col).alias("neighbor_id"))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id", "neighbor_id",
+            F.round(dot(F.col("qvec"), F.col("cvec")), 6).alias("cosine"),
+        )
+        # a pair sharing several band buckets arrives once per band
         .distinct()
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", F.round(dot(F.col("qvec"), F.col("cvec")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, k)

@@ -125,9 +125,10 @@ def build_session(
         # keep AQE, but not its empty-relation rewrite: when a banded
         # join's capped side comes up empty, that rule prunes the whole
         # observed subtree and the no-silent-caps drop metrics
-        # (similarity.cap_buckets) vanish exactly in the degenerate case
-        # they exist to report. The rewrite only saves work on
-        # empty-branch queries, which corpus-scale pipelines don't have.
+        # (similarity.cap_buckets, masked_buckets) vanish exactly in the
+        # degenerate case they exist to report. The rewrite only saves
+        # work on empty-branch queries, which corpus-scale pipelines
+        # don't have.
         .config(
             "spark.sql.adaptive.optimizer.excludedRules",
             "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",

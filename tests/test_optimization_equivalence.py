@@ -14,6 +14,9 @@ replaced (or as an independent brute-force reference):
   set (cosines: a numpy einsum over collected vectors), at every code
   width and type, including the cap and the no-silent-caps Observation
   metrics;
+* ``lsh_topk`` with the vectors on the banded rows == the former
+  id-only distinct + vector join-back candidates, caps and Observation
+  metrics included;
 * ``adjusted_distance``'s equal-after-normalization fast path == the
   full difflib path (alignment length after grapheme recombination);
 * ``char_ngram_counts``'s derived unigram rows == brute-force counts.
@@ -425,6 +428,75 @@ def test_embedding_near_dups_builds_without_jobs(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def _old_lsh_topk(corpus, queries, k, n_bands, n_bits, max_bucket, observation):
+    """The former ``lsh_topk`` formulation, kept as its reference: banded
+    (id, band, code) rows, the window-count ``cap_buckets`` on the corpus
+    side only, a broadcast band join, a pair distinct, the vectors
+    joined back to both sides, then the JVM dot and the top-k window."""
+    from pyspark.sql import Window
+
+    from cor_asv_ann_spark.operators.similarity import band_codes_udf, cap_buckets, dot
+
+    codes = band_codes_udf(n_bands, n_bits, 42, True)
+
+    def banded(df):
+        return df.select(
+            F.col("vec_id"), F.posexplode(codes(F.col("embedding"))).alias("band", "code")
+        )
+
+    cb = banded(corpus)
+    if max_bucket is not None:
+        cb = cap_buckets(cb, ["band", "code"], max_bucket, observation)
+    qb = banded(queries).withColumnRenamed("vec_id", "query_id")
+    cand = (
+        cb.join(F.broadcast(qb), ["band", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(F.col("query_id"), F.col("vec_id").alias("neighbor_id"))
+        .distinct()
+    )
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"))
+    scored = (
+        cand.join(cv, "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .withColumn("cosine", F.round(dot(F.col("qvec"), F.col("cvec")), 6))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
+@pytest.mark.parametrize("max_bucket", [None, 125, 50])
+def test_lsh_topk_matches_banded_join_back(spark, sf_small, max_bucket):
+    """``lsh_topk`` with the vectors on the banded rows and the cosine
+    taken before the pair distinct returns the rows of the former
+    id-only distinct + vector join-back formulation. k is the corpus
+    size, so the whole candidate set is compared, not only the top k;
+    the caps drop some (125) and all (50) of the 32 buckets."""
+    from cor_asv_ann_spark.operators.similarity import lsh_topk
+
+    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 10)
+    k = emb.count()
+    capped = max_bucket is not None
+    obs_new, obs_ref = Observation(), Observation()
+    new = lsh_topk(
+        emb, q, k=k, n_bands=8, n_bits=2, max_bucket=max_bucket,
+        observation=obs_new if capped else None, portable=True,
+    ).collect()
+    ref = _old_lsh_topk(emb, q, k, 8, 2, max_bucket, obs_ref).collect()
+    assert sorted(new) == sorted(ref)
+    assert bool(new) == (max_bucket != 50)
+    if capped:
+        mn, mo = obs_new.get, obs_ref.get
+        assert mn["rows_total"] == mo["rows_total"] == 8 * k
+        assert mn["rows_dropped"] == mo["rows_dropped"] > 0
+        assert round(mn["buckets_dropped"]) == round(mo["buckets_dropped"])
 
 
 def _round_half_up6(x: float) -> float:

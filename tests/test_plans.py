@@ -385,3 +385,27 @@ def test_pair_filter_has_no_lambda(spark, sf_small):
     assert len(conds) == 1, conds
     for banned in ("lambda", "zip_with", "exists", "array_position"):
         assert banned not in conds[0].lower(), conds[0]
+
+
+def test_lsh_topk_scans_each_side_once(spark, sf_small):
+    """The ANN search reads its vectors with the buckets: one parquet
+    scan and one band-code UDF per side, one (broadcast) join. The cap
+    is a window count over (band, code), which spills; no aggregation
+    collects a bucket's vectors into one array."""
+    import re
+
+    from cor_asv_ann_spark.operators.similarity import lsh_topk
+
+    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 10)
+    plan = formatted_plan(lsh_topk(emb, q, k=5, max_bucket=100, portable=True))
+
+    def nodes(name):
+        return re.findall(rf"^\(\d+\) {name}\b.*$", plan, re.M)
+
+    assert len(nodes("Scan parquet")) == 2, plan
+    assert len(nodes("ArrowEvalPython")) == 2, plan
+    assert len(nodes(r"\w*Join")) == 1 and has_broadcast_join(plan), plan
+    windows = re.findall(r"^\(\d+\) Window\n(?:.+\n)*?Arguments: .*$", plan, re.M)
+    assert any("band" in w and "code" in w for w in windows), plan
+    assert "collect_list" not in plan and not nodes("ObjectHashAggregate"), plan
