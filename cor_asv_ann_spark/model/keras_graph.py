@@ -472,8 +472,11 @@ class RefSeq2Seq:
         then ALL lines' beams expand in lockstep — one stacked decoder
         step per iteration over every line's active hypotheses (shared
         :func:`beam_search_multi` — rejection path, variable width,
-        prospective-cost ranking; per-line trajectories bit-identical to
-        the per-line formulation). Same contract as greedy."""
+        prospective-cost ranking). Each line's trajectory is the per-line
+        formulation's; for a batch of uniform-length lines the texts,
+        probabilities and alignments are exactly equal too (pinned by
+        test_encodings_beam with ``array_equal``). Same contract as
+        greedy."""
         from .seq2seq_np import beam_search_multi
 
         if not texts:

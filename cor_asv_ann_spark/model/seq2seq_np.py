@@ -407,12 +407,14 @@ class Seq2SeqModel:
         beams of ALL lines expand in lockstep — every decoder step is one
         stacked matmul over every line's ≤batch_cap active hypotheses
         (:func:`beam_search_multi`), amortizing the numpy GEMMs
-        ~n_lines× over a per-line loop while each line's search is
-        bit-for-bit the single-line algorithm (pinned by
-        test_encodings_beam batch-vs-single parity). Returns (texts,
-        probs, soft alignments) of each line's best final — same
-        contract as greedy, so beam mode keeps the Viterbi segmentation
-        path."""
+        ~n_lines× over a per-line loop while each line's search makes
+        the single-line algorithm's pops, expansions and tiebreaks and
+        gives its texts; per-char probabilities and alignments agree to
+        float32 rounding, since the stacked step rounds at other array
+        shapes (pinned by test_encodings_beam batch-vs-single parity).
+        Returns (texts, probs, soft alignments) of each line's best
+        final — same contract as greedy, so beam mode keeps the Viterbi
+        segmentation path."""
         if not texts:
             return [], [], []
         X, lens = self.encode_onehot(texts)
@@ -608,7 +610,10 @@ def beam_search_multi(
     active hypotheses are stacked into ONE ``step_fn`` call per
     iteration — amortizing the decoder matmuls ~n_lines× over the
     per-line formulation while each line's search trajectory (pops,
-    expansions, tiebreaks) is exactly the single-line algorithm's.
+    expansions, tiebreaks) is exactly the single-line algorithm's. The
+    stacked step's floats (per-char probabilities, alignments) agree
+    with the per-line step's to float32 rounding: numpy and BLAS round
+    the same math differently at other array shapes.
 
     ``step_fn(feed (N,V), states (len N), prev_a (N,Lmax), line_ids (N,))
     -> (p (N,V), a (N,Lmax), states)`` where row i belongs to line
