@@ -13,7 +13,10 @@ clusters at N and 4N executors):
 spark-submit starts the driver JVM before this script builds its
 session, so ``session.DRIVER_JIT_OPTIONS`` (delayed C2, see the
 ``session`` module docstring) reaches it only through
-``--driver-java-options``.
+``--driver-java-options``. Such a JVM gets the JIT options but not the
+class-data-sharing archive ``build_session`` starts its own driver JVM
+from, so it pays the full cold class loading (about 4 s more set-up on
+4 cores than ``python jobs/run_correction.py``).
 
 Local smoke:
 
